@@ -40,8 +40,11 @@ scale-canary:
 correctness-sf01:
 	python tools/check_correctness.py /root/testdata/sf0.1
 
+# The ROADMAP Tier-1 command, then the benchmark's own tests.
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	python -m pytest perfbench/tests
 
 correctness:
 	python tools/check_correctness.py /root/testdata/sf0.01

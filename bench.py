@@ -526,21 +526,48 @@ def _minhash_probe_jobs(spark, sf_dir: str) -> list:
     return [("minhash_incremental_probe", prepare, run_once)]
 
 
+def _cpus() -> str:
+    """Core count of the bench session (``local[N]``)."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
 def _evidence_path(repo_dir: str, sf: str = "0.1") -> str:
     """Self-archive target (VERDICT r10 item 4): the driver snapshots
     only the tail of bench stdout, so the full per-query JSON is also
     written here, named by the round the current driver window was
-    generated for. Non-default scale factors get a suffixed name so a
-    smoke run at sf0.001 can never clobber the round's sf0.1 record."""
+    generated for. Non-default scale factors and core counts get a
+    suffixed name, so neither a smoke run at sf0.001 nor an 8-core run
+    can clobber the round's sf0.1 32-core record."""
     from neo4j_to_clickhouse_spark.plans.queries import _WINDOW_ROUND
 
     tag = "" if str(sf) == "0.1" else f"_sf{sf}"
+    cpus = _cpus()
+    if cpus != "32":
+        tag += f"_cpus{cpus}"
     return os.path.join(
         repo_dir,
         "docs",
         "evidence",
         f"BENCH_r{_WINDOW_ROUND}{tag}_local.json",
     )
+
+
+def _archive(payload: str, evidence: str) -> None:
+    """Write the full bench JSON to ``evidence``. If the write fails the
+    payload goes to stderr instead, so the record survives; stdout is
+    left for the contract line the caller prints after this."""
+    try:
+        os.makedirs(os.path.dirname(evidence), exist_ok=True)
+        with open(evidence, "w") as fh:
+            fh.write(payload + "\n")
+        print(f"# archived full JSON -> {evidence}", file=sys.stderr)
+    except OSError as exc:  # archive failure must not fail the bench
+        print(
+            f"# evidence archive failed: {exc}; full JSON follows",
+            file=sys.stderr,
+        )
+        print(payload, file=sys.stderr)
+    sys.stderr.flush()
 
 
 def _pin_caches(spark, sf_dir: str, cpus: str) -> None:
@@ -557,8 +584,9 @@ def _pin_caches(spark, sf_dir: str, cpus: str) -> None:
     timed run (see ``_measure``), so each run computes its persists from
     the parquet inputs inside the timed region. The dedup rows'
     absolute numbers rose accordingly (re-baselined in
-    OPTIMIZATION_r16.md); JVM/JIT and worker-pool warmth stay, because a
-    long-lived cluster genuinely has those."""
+    docs/evidence/BENCH_r16_honest_baseline.json); JVM/JIT and
+    worker-pool warmth stay, because a long-lived cluster genuinely has
+    those."""
     # warm the JVM + parquet footers so per-query times measure the queries
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     # warm the Python worker pool (fork + numpy/pandas import is a one-time
@@ -577,7 +605,7 @@ def _pin_caches(spark, sf_dir: str, cpus: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     spark = get_spark(
         "bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
@@ -812,17 +840,10 @@ def main() -> None:
     # (metric/value/unit/queries/sf + the dirty flags), small enough
     # that a tail capture always contains it whole, with NOTHING printed
     # after it (VERDICT r15 item 8).
-    evidence = _evidence_path(
-        os.path.dirname(os.path.abspath(__file__)), sf
+    _archive(
+        payload,
+        _evidence_path(os.path.dirname(os.path.abspath(__file__)), sf),
     )
-    try:
-        os.makedirs(os.path.dirname(evidence), exist_ok=True)
-        with open(evidence, "w") as fh:
-            fh.write(payload + "\n")
-        print(f"# archived full JSON -> {evidence}", file=sys.stderr)
-    except OSError as exc:  # archive failure must not fail the bench
-        print(f"# evidence archive failed: {exc}", file=sys.stderr)
-    sys.stderr.flush()
     print(json.dumps(contract))
     sys.stdout.flush()
 

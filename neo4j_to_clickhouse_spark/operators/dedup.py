@@ -158,9 +158,10 @@ def shingle_sets(
     (``n_sh``) are a ``size()`` projection instead of a corpus-wide
     groupBy.  The trailing NULL slots :func:`ngram_array` leaves are
     exactly the last ``n-1`` positions, so a ``slice`` drops them
-    without a higher-order filter.  Bit-identical (id, shingle) sets
-    pinned in ``tools/ab_shingles.py`` (260,388 rows at sf0.1;
-    generation scan 1.01 -> 0.46 s).
+    without a higher-order filter.  Bit-identical (id, shingle) sets to
+    the corpus-wide-distinct form (260,388 rows at sf0.1; generation
+    scan 1.01 -> 0.46 s); the sets are pinned by digest in
+    ``tests/test_shingle_contracts.py``.
 
     Contract: one row per ``id`` (the documents-table invariant).  Rows
     sharing an id would no longer have their shingle sets merged — the
@@ -205,8 +206,8 @@ def word_shingles(
 
     The exploded view of :func:`shingle_sets` — same row set as the
     pre-r16 tokenize -> ngram -> explode -> corpus-wide distinct
-    formulation (pinned in ``tools/ab_shingles.py``), with the distinct
-    exchange replaced by the per-row ``array_distinct``.
+    formulation (pinned in ``tests/test_shingle_contracts.py``), with
+    the distinct exchange replaced by the per-row ``array_distinct``.
     """
     return shingle_sets(df, id_col, text_col, n).select(
         "id", F.explode("__sh").alias("shingle")
@@ -345,8 +346,8 @@ def jaccard_pairs(
     :func:`shingle_sets` row per document, so per-doc sizes are a
     ``size()`` projection off the cache instead of a corpus-wide
     groupBy aggregate — one exchange gone; the exploded view feeding
-    the inverted-index join derives from the same cache.  Identical
-    output pinned in ``tools/ab_shingles.py``.
+    the inverted-index join derives from the same cache.  Output rows
+    pinned by digest in ``tests/test_shingle_contracts.py``.
     """
     from pyspark import StorageLevel
 
@@ -871,7 +872,8 @@ def minhash_lsh_dedup(
     twice (an (id_b, shingle)-keyed join over every candidate shingle
     occurrence) and re-aggregated pairs — corpus-shingle-sized exchanges
     that no longer exist (26 -> 17 Exchanges, 7 -> 4 scans at sf0.1;
-    same-session A/B 2.9-3.0 -> 2.5-2.7 s, ``tools/ab_shingles.py``).
+    same-session A/B 2.9-3.0 -> 2.5-2.7 s; output rows pinned by digest
+    in ``tests/test_shingle_contracts.py``).
 
     One table is persisted (memory-and-disk, LRU-evicted), because
     Catalyst only reuses *identical* subplans: the per-document set
@@ -1046,8 +1048,9 @@ def minhash_incremental(
     (id, bucket) rows probe the store with one equi-join on the band
     hash (bucketed store ⇒ co-located, shuffle ∝ batch); verification
     touches only candidate old-docs' digests (semi-join first, then ONE
-    aggregate that yields each candidate old-doc's digest array + count
-    — the store is never fully aggregated), and the overlap is
+    aggregate that yields each candidate old-doc's distinct digest set,
+    so duplicate store rows never deflate the Jaccard — the store is
+    never fully aggregated), and the overlap is
     ``array_intersect`` per candidate pair.  The pre-r16 formulation
     re-joined the exploded batch digests against the exploded candidate
     store digests on (old_id, digest) and re-aggregated pairs —
@@ -1082,14 +1085,12 @@ def minhash_incremental(
     )
     od = _bind_store_half(seen_digests, "digest")
     # only candidate old-docs' digests move: semi-join before the
-    # aggregate, then one row (digest array + count) per candidate
+    # aggregate, then one distinct digest set per candidate — a document
+    # appended to the store twice must not count its shingles twice
     old_sets = (
         od.join(cand.select("old_id").distinct(), "old_id")
         .groupBy("old_id")
-        .agg(
-            F.count("*").alias("n_b"),
-            F.collect_list("digest").alias("__dg_b"),
-        )
+        .agg(F.collect_set("digest").alias("__dg_b"))
     )
     na = sets.select(
         F.col("id").alias("new_id"),
@@ -1109,7 +1110,7 @@ def minhash_incremental(
         .withColumn(
             "jaccard",
             F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+            / (F.col("n_a") + F.size("__dg_b") - F.col("n_inter")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("new_id").alias(id_col))

@@ -12,8 +12,7 @@ does crash-recoverable directory renames (plain parquet on a local/HDFS-like
 filesystem); :class:`~neo4j_to_clickhouse_spark.operators.txn_store.TxnLogPartitionStore`
 adds snapshot isolation, time travel, and optimistic concurrency over the
 same plain parquet via a Delta-protocol-style commit log (no external
-jars); a real transactional table format (Delta `replaceWhere`, Iceberg
-`overwritePartitions`) plugs in as another store where its jars exist.
+jars).
 """
 
 from __future__ import annotations
@@ -202,94 +201,6 @@ class LocalPartitionStore(PartitionStore):
             marker.unlink()
             recovered.append(month)
         return recovered
-
-
-class DeltaPartitionStore(PartitionStore):
-    """Transactional realization over Delta Lake: partition replacement is
-    ``replaceWhere`` (snapshot-isolated, no reader-visible gap, no manual
-    recovery), retention is a metadata ``DELETE``. Requires the
-    ``delta-spark`` package + jars on the session — gated behind an
-    import-try so plain-parquet deployments never pay the dependency.
-
-    ``replace_months`` here reads the STAGED parquet back and commits it
-    in one transaction per month; at real scale the compaction job would
-    write the Delta table directly and skip the staging round-trip —
-    kept symmetric with :class:`LocalPartitionStore` so ``compact`` works
-    with either store unchanged.
-    """
-
-    def __init__(self, spark: SparkSession):
-        try:
-            import delta  # noqa: F401
-        except ImportError as e:  # pragma: no cover - env without delta
-            raise ImportError(
-                "DeltaPartitionStore requires the delta-spark package and "
-                "its jars on the SparkSession (absent in this environment; "
-                "use LocalPartitionStore)"
-            ) from e
-        self._spark = spark
-
-    def read(
-        self, spark: SparkSession, table_path: str
-    ) -> DataFrame:  # pragma: no cover - requires delta jars
-        return spark.read.format("delta").load(table_path)
-
-    def replace_months(
-        self,
-        table_path: str,
-        staging_path: str,
-        months: list[str],
-        base: object | None = None,
-    ) -> None:  # pragma: no cover - requires delta jars
-        # `base` is unused: each per-month replaceWhere below is its own
-        # Delta transaction, so Delta's conflict detection protects the
-        # commit itself but NOT the gap since compact's read — at real
-        # scale the compaction should read and overwrite inside one job
-        # (or check the table version before committing) rather than
-        # round-trip through staging; see begin_rewrite's docstring.
-        for month in months:
-            staged = Path(staging_path) / f"event_month={month}"
-            # basePath keeps event_month as an inferred partition column: a
-            # bare leaf-directory read would DROP it (partitionBy strips it
-            # from the data files), and the Delta commit below would then
-            # fail replaceWhere's schema/predicate check.
-            src = (
-                self._spark.read.option("basePath", staging_path)
-                .parquet(str(staged))
-                if staged.exists()
-                else None
-            )
-            writer = (
-                src.write if src is not None
-                else self._spark.createDataFrame(
-                    [], self._spark.read.format("delta").load(table_path).schema
-                ).write
-            )
-            (
-                writer.format("delta")
-                .mode("overwrite")
-                .option(
-                    "replaceWhere", f"event_month = '{month}'"
-                )
-                .save(table_path)
-            )
-
-    def drop_months(
-        self, table_path: str, cutoff_month: str
-    ) -> list[str]:  # pragma: no cover - requires delta jars
-        from delta.tables import DeltaTable
-
-        t = DeltaTable.forPath(self._spark, table_path)
-        before = {
-            r[0]
-            for r in self._spark.read.format("delta")
-            .load(table_path)
-            .select("event_month")
-            .distinct()
-            .collect()
-        }
-        t.delete(f"event_month < '{cutoff_month}'")
-        return sorted(m for m in before if m < cutoff_month)
 
 
 def compact(

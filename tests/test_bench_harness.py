@@ -27,7 +27,8 @@ def test_headline_set_covers_broadened_shapes():
     assert bench.BENCH_MAINTENANCE == ["maintenance_compact"]
 
 
-def test_evidence_path_is_round_stamped(tmp_path):
+def test_evidence_path_is_round_stamped(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")  # the record's core count
     p = bench._evidence_path(str(tmp_path))
     assert p == str(
         tmp_path / "docs" / "evidence" / f"BENCH_r{_WINDOW_ROUND}_local.json"
@@ -35,6 +36,39 @@ def test_evidence_path_is_round_stamped(tmp_path):
     # a smoke run at another SF must not clobber the sf0.1 record
     p2 = bench._evidence_path(str(tmp_path), "0.001")
     assert p2.endswith(f"BENCH_r{_WINDOW_ROUND}_sf0.001_local.json")
+
+
+def test_evidence_path_names_the_core_count(tmp_path, monkeypatch):
+    """An 8-core run must not overwrite the 32-core record."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    full = bench._evidence_path(str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    c8 = bench._evidence_path(str(tmp_path))
+    assert c8 != full
+    assert c8.endswith(f"BENCH_r{_WINDOW_ROUND}_cpus8_local.json")
+    assert bench._evidence_path(str(tmp_path), "0.001").endswith(
+        f"BENCH_r{_WINDOW_ROUND}_sf0.001_cpus8_local.json"
+    )
+
+
+def test_archive_writes_payload(tmp_path, capsys):
+    target = tmp_path / "docs" / "evidence" / "BENCH.json"
+    bench._archive('{"runs": [1]}', str(target))
+    assert target.read_text() == '{"runs": [1]}\n'
+    assert capsys.readouterr().out == ""  # stdout is the contract's
+
+
+def test_archive_failure_sends_payload_to_stderr(tmp_path, capsys):
+    """An OSError on the archive write must not lose the record: the
+    full payload goes to stderr, and stdout stays empty for the
+    contract line the bench prints last."""
+    blocker = tmp_path / "docs"
+    blocker.write_text("a file where the evidence directory belongs")
+    bench._archive('{"runs": [1]}', str(blocker / "evidence" / "B.json"))
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert "evidence archive failed" in out.err
+    assert out.err.rstrip().endswith('{"runs": [1]}')
 
 
 def test_bm25_index_jobs_shape(spark):

@@ -454,6 +454,29 @@ def test_minhash_incremental_drops_store_near_dups(spark):
     assert ids == [12, 13]
 
 
+def test_minhash_incremental_duplicate_store_rows_do_not_deflate_jaccard(spark):
+    """A document appended to the store twice still matches its clone
+    at J = 1: the store side counts each distinct digest once, like the
+    array_intersect overlap does."""
+    from neo4j_to_clickhouse_spark.operators.dedup import (
+        lsh_store_buckets,
+        lsh_store_digests,
+        minhash_incremental,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog near the river"
+    old = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    new = spark.createDataFrame([(10, text)], "doc_id long, text string")
+    buckets, digests = lsh_store_buckets(old), lsh_store_digests(old)
+    surv = minhash_incremental(
+        new,
+        buckets.unionAll(buckets),
+        digests.unionAll(digests),
+        threshold=0.8,
+    )
+    assert surv.count() == 0
+
+
 def test_minhash_incremental_store_roundtrip(spark, tmp_path):
     # the store persists as plain parquet and the loop closes by
     # appending survivors' own rows

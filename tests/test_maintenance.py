@@ -275,22 +275,6 @@ def test_initial_load_bootstrap(spark, tmp_path):
     assert live.count() == 3
 
 
-def test_delta_store_gated_with_clear_error(spark):
-    """Without delta-spark the transactional store must fail at
-    CONSTRUCTION with an actionable message, not at first use."""
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        DeltaPartitionStore,
-    )
-
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="delta-spark"):
-            DeltaPartitionStore(spark)
-    else:  # environment has delta: construction succeeds
-        DeltaPartitionStore(spark)
-
-
 def test_distinct_sketches_merge_across_months(spark, event_table):
     """uniqState/uniqMerge parity: per-(month,type) sketches merged across
     months must estimate the true cross-month distinct count — the rollup
