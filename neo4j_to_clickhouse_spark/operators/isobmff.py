@@ -4,16 +4,24 @@ Shrinks the multimodal codec boundary at the CONTAINER level: AVIF
 stills (HEIF/MIAF, ISO/IEC 23008-12) and MP4 videos are both ISOBMFF
 box trees, so their dimensions, bit depth, alpha presence, track
 layout, duration, and per-frame byte ranges are all readable with zero
-codec work.  Consumers:
+codec work.  Consumers in :mod:`.multimodal`:
 
-- :func:`.multimodal.probe_assets` fills ``width``/``height``/
-  ``duration_ms`` via :func:`probe_avif` (HEIF stills incl. HEIC/grid),
-  :func:`probe_mp4` and :func:`movie_duration_ms` (MP4 + animated AVIF);
-- the ``mp4_keyframe_stats`` registry query reads
-  :func:`mp4_sample_index` (the stsz/stsc/stco/stss/stts walk).
+- ``probe_assets`` fills ``width``/``height``/``duration_ms`` via
+  :func:`probe_avif` (HEIF stills incl. HEIC/grid), :func:`probe_mp4`
+  and :func:`movie_duration_ms` (MP4 + animated AVIF);
+- ``sample_frames`` emits the container's REAL codec samples via
+  :func:`mp4_extract_samples` (keyframe-aligned byte ranges from the
+  stsz/stsc/stco/stss/stts walk); and
+- ``extract_video_frames`` turns those samples into pixels:
+  :func:`wrap_video_sample_as_still` rewraps an AV1/HEVC sync sample
+  (config record from :func:`mp4_video_config`; item location written
+  via iloc) as a single-item AVIF/HEIC that the :mod:`.heif` path
+  decodes — bit-identical to the video frame, no video decoder.
 
-The fixture encoders (:func:`encode_avif` / :func:`encode_mp4`) build
-spec-valid containers with closed-form layouts for the oracle queries
+:func:`item_payload` / :func:`primary_item_id` read the meta item tree
+(iloc v0-2, multi-extent, idat), and the fixture encoders
+(:func:`encode_avif` / :func:`encode_mp4`) build spec-valid containers
+with closed-form layouts for the oracle queries
 (``mp4_keyframe_stats`` / ``multimodal_probe_stats``) and tests.
 
 Box grammar: 4-byte big-endian size + 4-byte type; ``size == 1`` means
@@ -31,6 +39,24 @@ from __future__ import annotations
 
 import struct
 from typing import Iterator
+
+# Container boxes whose payload is itself a sequence of boxes.  `meta`
+# is a FullBox container (4 header bytes before its children); handled
+# explicitly where walked.
+_CONTAINERS = {
+    b"moov",
+    b"trak",
+    b"mdia",
+    b"minf",
+    b"stbl",
+    b"edts",
+    b"dinf",
+    b"iprp",
+    b"ipco",
+    b"moof",
+    b"traf",
+    b"mvex",
+}
 
 _ALPHA_URNS = (
     b"urn:mpeg:mpegB:cicp:systems:auxiliary:alpha",
@@ -308,11 +334,229 @@ def probe_avif(payload: bytes) -> dict | None:
     }
 
 
+def _parse_iloc(
+    buf: bytes, p0: int, p1: int
+) -> dict[int, tuple[int, int, list[tuple[int, int]]]]:
+    """item_ID -> (construction_method, base_offset, [(offset, length)]).
+
+    ISO 14496-12 §8.11.3, versions 0/1/2. construction_method 0 = file
+    offsets, 1 = offsets into the ``idat`` box payload."""
+    version, _, b = _full(buf, p0)
+    sizes = buf[b]
+    offset_size, length_size = sizes >> 4, sizes & 0xF
+    base_offset_size = buf[b + 1] >> 4
+    index_size = (buf[b + 1] & 0xF) if version in (1, 2) else 0
+    b += 2
+    if version < 2:
+        (count,) = struct.unpack_from(">H", buf, b)
+        b += 2
+    else:
+        (count,) = struct.unpack_from(">I", buf, b)
+        b += 4
+
+    def read_n(n: int) -> int:
+        nonlocal b
+        v = int.from_bytes(buf[b : b + n], "big")
+        b += n
+        return v
+
+    out: dict[int, tuple[int, int, list[tuple[int, int]]]] = {}
+    for _ in range(count):
+        if b >= p1:
+            break
+        item_id = read_n(2 if version < 2 else 4)
+        method = (read_n(2) & 0xF) if version in (1, 2) else 0
+        read_n(2)  # data_reference_index
+        base = read_n(base_offset_size)
+        (n_extents,) = struct.unpack_from(">H", buf, b)
+        b += 2
+        extents = []
+        for _ in range(n_extents):
+            if index_size:
+                read_n(index_size)
+            extents.append((read_n(offset_size), read_n(length_size)))
+        out[item_id] = (method, base, extents)
+    return out
+
+
+def primary_item_id(buf: bytes) -> int | None:
+    """The ``pitm`` primary item id of a HEIF still, or None."""
+    meta = find_box(buf, (b"meta",))
+    if meta is None:
+        return None
+    pitm = find_box(buf, (b"pitm",), *meta)
+    if pitm is None:
+        return None
+    version, _, b = _full(buf, pitm[0])
+    return struct.unpack_from(">H" if version == 0 else ">I", buf, b)[0]
+
+
+def item_payload(buf: bytes, item_id: int) -> bytes | None:
+    """Concatenated extent bytes of one meta item (the codec payload an
+    AVIF/HEIC item actually decodes from). None when the item or its
+    location is absent / out of bounds."""
+    meta = find_box(buf, (b"meta",))
+    if meta is None:
+        return None
+    iloc = find_box(buf, (b"iloc",), *meta)
+    if iloc is None:
+        return None
+    loc = _parse_iloc(buf, *iloc).get(item_id)
+    if loc is None:
+        return None
+    method, base, extents = loc
+    if method == 1:
+        idat = find_box(buf, (b"idat",), *meta)
+        if idat is None:
+            return None
+        src0, src1 = idat
+    else:
+        src0, src1 = 0, len(buf)
+    parts = []
+    for off, length in extents:
+        a = src0 + base + off
+        if a < src0 or a + length > src1:
+            return None
+        parts.append(buf[a : a + length])
+    return b"".join(parts)
+
+
+def wrap_video_sample_as_still(
+    sample: bytes,
+    config_type: str,
+    config: bytes,
+    width: int,
+    height: int,
+) -> bytes:
+    """Rewrap one intra-coded video sample (an MP4 track's sync-sample
+    byte range from :func:`mp4_extract_samples`) as a minimal decodable
+    single-item HEIF still: same codec bitstream, still-image
+    container. ``config_type``/``config`` are the track's codec-config
+    record from :func:`mp4_video_config` — ``av1C`` yields an AVIF,
+    ``hvcC`` an HEIC. This is what lets a HEIF decoder serve as the
+    pixel decoder for AV1/HEVC video keyframes. The decoded frame may
+    carry codec padding beyond (width, height) — HEVC tiles pad to CTU
+    multiples — so consumers crop to the declared dims."""
+    if config_type == "av1C":
+        brand, item_type = b"avif", b"av01"
+    elif config_type == "hvcC":
+        brand, item_type = b"heic", b"hvc1"
+    else:
+        raise ValueError(f"no still-image mapping for {config_type}")
+    ftyp = box(b"ftyp", brand + struct.pack(">I", 0) + brand + b"mif1")
+    hdlr = fullbox(
+        b"hdlr", 0, 0, b"\x00" * 4 + b"pict" + b"\x00" * 12 + b"\x00"
+    )
+    pitm = fullbox(b"pitm", 0, 0, struct.pack(">H", 1))
+    iinf = fullbox(
+        b"iinf",
+        0,
+        0,
+        struct.pack(">H", 1)
+        + fullbox(b"infe", 2, 0, struct.pack(">HH", 1, 0) + item_type + b"\x00"),
+    )
+    props = fullbox(
+        b"ispe", 0, 0, struct.pack(">II", width, height)
+    ) + box(config_type.encode("ascii"), config)
+    iprp = box(
+        b"iprp",
+        box(b"ipco", props)
+        + fullbox(b"ipma", 0, 0, struct.pack(">I", 1) + struct.pack(">HB", 1, 2) + bytes([1, 2])),
+    )
+
+    def build_iloc(offset: int) -> bytes:
+        return fullbox(
+            b"iloc",
+            0,
+            0,
+            bytes([0x44, 0x00])  # offset_size 4, length_size 4, no base
+            + struct.pack(">HHHH", 1, 1, 0, 1)  # count, id, dref, extents
+            + struct.pack(">II", offset, len(sample)),
+        )
+
+    meta_children = hdlr + pitm + iinf + iprp + build_iloc(0)
+    meta_len = len(fullbox(b"meta", 0, 0, meta_children))
+    data_offset = len(ftyp) + meta_len + 8  # + mdat header
+    meta = fullbox(
+        b"meta", 0, 0, hdlr + pitm + iinf + iprp + build_iloc(data_offset)
+    )
+    return ftyp + meta + box(b"mdat", sample)
+
+
+def wrap_av1_item_as_avif(
+    sample: bytes, av1c: bytes, width: int, height: int
+) -> bytes:
+    """AV1 shorthand for :func:`wrap_video_sample_as_still`."""
+    return wrap_video_sample_as_still(sample, "av1C", av1c, width, height)
+
+
 # ---------------------------------------------------------------------
 # MP4 probe + sample index
 # ---------------------------------------------------------------------
 
 _VIDEO_CODECS = {b"avc1", b"avc3", b"hev1", b"hvc1", b"vp08", b"vp09", b"av01"}
+
+
+def mp4_video_config(
+    payload: bytes, track_id: int | None = None
+) -> dict | None:
+    """Codec identity of an MP4 video track: 4cc, VisualSampleEntry
+    dims, and the raw codec-config record body (``av1C``/``hvcC``/
+    ``avcC`` — whatever config box the sample entry carries). The
+    config record plus a sync sample is everything a still-image
+    rewrap (:func:`wrap_av1_item_as_avif`) needs. Accepts any ISOBMFF
+    file with a movie box — including animated AVIF (``avis``)."""
+    if not has_movie_box(payload):
+        return None
+    buf = payload
+    m0, m1 = find_box(buf, (b"moov",))
+    for btype, t0, t1 in iter_boxes(buf, m0, m1):
+        if btype != b"trak":
+            continue
+        info = _probe_trak(buf, t0, t1)
+        if info is None:
+            continue
+        if track_id is not None and info["track_id"] != track_id:
+            continue
+        if track_id is None and not (
+            info["handler"] == "vide"
+            or (info["codec"] or "").encode() in _VIDEO_CODECS
+        ):
+            continue
+        stsd = find_box(
+            buf, (b"mdia", b"minf", b"stbl", b"stsd"), t0, t1
+        )
+        if stsd is None:
+            return None
+        _, _, b = _full(buf, stsd[0])
+        for entry_type, e0, e1 in iter_boxes(buf, b + 4, stsd[1]):
+            # VisualSampleEntry: 8 (SampleEntry) + 16 (predefined) then
+            # width/height u16; config boxes start at payload offset 78
+            if e1 - e0 < 78:
+                # entry too short for a VisualSampleEntry: codec
+                # identity only, dims from tkhd, no config record
+                return {
+                    "codec": entry_type.decode("ascii", "replace"),
+                    "width": info["width"],
+                    "height": info["height"],
+                    "config_type": None,
+                    "config": None,
+                }
+            w, h = struct.unpack_from(">HH", buf, e0 + 24)
+            config_type = config = None
+            for ct, c0, c1 in iter_boxes(buf, e0 + 78, e1):
+                if ct in (b"av1C", b"hvcC", b"avcC", b"vpcC"):
+                    config_type = ct.decode("ascii")
+                    config = buf[c0:c1]
+                    break
+            return {
+                "codec": entry_type.decode("ascii", "replace"),
+                "width": int(w),
+                "height": int(h),
+                "config_type": config_type,
+                "config": config,
+            }
+    return None
 
 
 def is_mp4(payload: bytes | None) -> bool:
@@ -322,6 +566,15 @@ def is_mp4(payload: bytes | None) -> bool:
     if any(b in _HEIF_STILL_BRANDS for b in brands):
         return False
     return find_box(payload, (b"moov",)) is not None
+
+
+def has_movie_box(payload: bytes | None) -> bool:
+    """True when the ISOBMFF file carries a ``moov`` — plain MP4s, but
+    also animated AVIF (``avis``: still-image meta + a real AV1 video
+    track) and HEIF sequences. The sample-table functions below accept
+    any such file; :func:`is_mp4` stays the *classifier* (a HEIF brand
+    is not "an MP4" even when it has tracks)."""
+    return is_isobmff(payload) and find_box(payload, (b"moov",)) is not None
 
 
 def _mvhd_duration_ms(buf: bytes, m0: int, m1: int) -> int | None:
@@ -341,10 +594,10 @@ def _mvhd_duration_ms(buf: bytes, m0: int, m1: int) -> int | None:
 def movie_duration_ms(payload: bytes) -> int | None:
     """mvhd movie duration of any ISOBMFF file with a moov (MP4s and
     animated AVIF / HEIF sequences alike), in milliseconds."""
-    moov = find_box(payload, (b"moov",)) if is_isobmff(payload) else None
-    if moov is None:
+    if not has_movie_box(payload):
         return None
-    return _mvhd_duration_ms(payload, *moov)
+    m0, m1 = find_box(payload, (b"moov",))
+    return _mvhd_duration_ms(payload, m0, m1)
 
 
 def probe_mp4(payload: bytes) -> dict | None:
@@ -450,11 +703,10 @@ def mp4_sample_index(
     missing (fragmented MP4 with empty ``stbl`` included: ``moof``
     parsing is out of scope for the prober).
     """
-    moov = find_box(payload, (b"moov",)) if is_isobmff(payload) else None
-    if moov is None:
+    if not has_movie_box(payload):
         raise ValueError("no movie box in payload")
     buf = payload
-    m0, m1 = moov
+    m0, m1 = find_box(buf, (b"moov",))
     chosen = None
     for btype, t0, t1 in iter_boxes(buf, m0, m1):
         if btype != b"trak":
@@ -673,6 +925,7 @@ def encode_mp4(
     use_co64: bool = False,
     v1_headers: bool = False,
     track_id: int = 1,
+    sample_entry_body: bytes | None = None,
     major_brand: bytes = b"isom",
 ) -> bytes:
     """Minimal progressive MP4: ftyp + mdat + moov, one video track.
@@ -710,7 +963,10 @@ def encode_mp4(
         struct.pack(">I", len(runs))
         + b"".join(struct.pack(">II", n, d) for n, d in runs),
     )
-    entry = box(codec, b"\x00" * 8)  # opaque sample entry: codec 4cc only
+    # opaque 8-byte entry by default; pass a full VisualSampleEntry body
+    # (dims at offset 24, config boxes from offset 78) to build a track
+    # that mp4_video_config can read a codec config from
+    entry = box(codec, sample_entry_body or b"\x00" * 8)
     stsd = fullbox(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
     sizes = [len(s) for s in samples]
     uniform = sizes and all(s == sizes[0] for s in sizes)
@@ -808,3 +1064,32 @@ def encode_mp4(
     trak = box(b"trak", tkhd + mdia)
     moov = box(b"moov", mvhd + trak)
     return ftyp + mdat + moov
+
+
+def mp4_extract_samples(
+    payload: bytes,
+    every_ms: int = 1000,
+    keyframes_only: bool = False,
+    track_id: int | None = None,
+) -> list[tuple[int, int, bytes]]:
+    """Real frame sampling without a decoder: pick the container sample
+    nearest each ``every_ms`` tick (optionally snapping back to the
+    previous keyframe, the honest contract for inter-coded streams) and
+    return ``[(frame_idx, pts_ms, codec_sample_bytes), ...]``."""
+    index = mp4_sample_index(payload, track_id)
+    if not index:
+        return []
+    end_ms = index[-1][3] + 1
+    out: list[tuple[int, int, bytes]] = []
+    i = 0
+    for tick in range(0, end_ms, every_ms):
+        while i + 1 < len(index) and index[i + 1][3] <= tick:
+            i += 1
+        j = i
+        if keyframes_only:
+            while j > 0 and not index[j][2]:
+                j -= 1
+        off, size, _key, pts = index[j]
+        if off + size <= len(payload):
+            out.append((j, pts, payload[off : off + size]))
+    return out

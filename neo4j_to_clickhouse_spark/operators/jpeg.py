@@ -13,14 +13,13 @@ not for a 100 TB image crawl, which is why the boundary stays pluggable).
 Supported: SOF0 (baseline), SOF1 (extended sequential — identical
 decode path), SOF2 (progressive: DC-first/refine and AC
 spectral-selection/successive-approximation scans with EOB runs, the
-jdphuff algorithm), SOF9/SOF10 (arithmetic-coded sequential and
-progressive — QM-coder entropy decode in sibling :mod:`.jpeg_arith`,
-DAC conditioning honored), 8-bit samples, grayscale or YCbCr, any
+jdphuff algorithm), 8-bit samples, grayscale or YCbCr, any
 integer-ratio subsampling (4:4:4, 4:2:2, 4:2:0), restart intervals,
 and both sequential scan layouts — fully interleaved (one SOS, MCU
 raster) and non-interleaved (T.81 A.2.2: one SOS per component, block
 raster). Rejected with ``ValueError``: 12-bit precision,
-hierarchical/lossless SOFs, partially-interleaved component subsets —
+arithmetic-coded (SOF9/SOF10) and hierarchical/lossless SOFs,
+partially-interleaved component subsets —
 the caller treats that as "not decodable here".
 
 Reference parity: the reference pipeline stores media as opaque blobs
@@ -149,16 +148,11 @@ def _extend(v: int, t: int) -> int:
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def decode_jpeg(payload: bytes, _coef_sink: dict | None = None) -> np.ndarray:
+def decode_jpeg(payload: bytes) -> np.ndarray:
     """Decode baseline JPEG bytes to an HxWx3 uint8 RGB array.
 
     Raises ``ValueError`` for non-JPEG input and for JPEG variants
     outside the baseline subset documented in the module docstring.
-
-    ``_coef_sink`` is a test hook: for frames decoded through the
-    coefficient store (progressive and arithmetic), the dict receives
-    ``frame`` and the zig-zag ``coefs`` before assembly so oracle tests
-    can compare quantized coefficients integer-exact against libjpeg.
     """
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (no SOI)")
@@ -169,10 +163,7 @@ def decode_jpeg(payload: bytes, _coef_sink: dict | None = None) -> np.ndarray:
     planes = None  # shared across scans (non-interleaved layouts)
     decoded: set[int] = set()
     progressive = False
-    arith = False  # SOF9/SOF10: QM-coded entropy (jpeg_arith)
-    dac_dc: dict[int, tuple[int, int]] = {}  # DAC DC (L, U) per table
-    dac_ac: dict[int, int] = {}  # DAC AC Kx per table
-    prog_coefs = None  # coefficient store (progressive + arith frames)
+    prog_coefs = None  # coefficient store (progressive frames)
     dc_scanned: set[int] = set()
     pos = 2
     d = payload
@@ -193,9 +184,6 @@ def decode_jpeg(payload: bytes, _coef_sink: dict | None = None) -> np.ndarray:
                 and prog_coefs is not None
                 and dc_scanned == {cid for cid, *_ in frame[2]}
             ):
-                if _coef_sink is not None:
-                    _coef_sink["frame"] = frame
-                    _coef_sink["coefs"] = prog_coefs
                 return _assemble_progressive(frame, prog_coefs, qt)
             break
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / RSTn
@@ -221,7 +209,7 @@ def decode_jpeg(payload: bytes, _coef_sink: dict | None = None) -> np.ndarray:
                     tbl = np.frombuffer(body, ">u2", 64, i).astype(np.int32)
                     i += 128
                 qt[tq] = tbl
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):  # SOF0/1/2/9/10
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2
             if len(body) < 6 or len(body) < 6 + 3 * body[5]:
                 raise ValueError("truncated SOF segment")
             prec, h, w, nc = body[0], *struct.unpack_from(">HH", body, 1), body[5]
@@ -232,34 +220,13 @@ def decode_jpeg(payload: bytes, _coef_sink: dict | None = None) -> np.ndarray:
                 cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
                 comps.append((cid, hv >> 4, hv & 0x0F, tq))
             frame = (h, w, comps)
-            progressive = marker in (0xC2, 0xCA)
-            arith = marker in (0xC9, 0xCA)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xCB,
+            progressive = marker == 0xC2
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
             raise ValueError(
-                "only baseline/extended-sequential/progressive JPEG "
-                "(Huffman or arithmetic entropy coding) is supported "
-                f"(SOF marker 0x{marker:02X})"
+                "only Huffman-coded baseline/extended-sequential/"
+                f"progressive JPEG is supported (SOF marker 0x{marker:02X})"
             )
-        elif marker == 0xCC:  # DAC: arithmetic conditioning (B.2.4.3)
-            i = 0
-            while i + 2 <= len(body):
-                tc, tb = body[i] >> 4, body[i] & 0x0F
-                val = body[i + 1]
-                i += 2
-                if tb > 3:
-                    raise ValueError("bad DAC table id")
-                if tc == 0:
-                    low, up = val & 0x0F, val >> 4
-                    if low > up:
-                        raise ValueError("bad DAC DC conditioning")
-                    dac_dc[tb] = (low, up)
-                elif tc == 1:
-                    if not 1 <= val <= 63:
-                        raise ValueError("bad DAC AC conditioning")
-                    dac_ac[tb] = val
-                else:
-                    raise ValueError("bad DAC table class")
         elif marker == 0xC4:  # DHT
             i = 0
             while i + 17 <= len(body):
@@ -292,41 +259,6 @@ def decode_jpeg(payload: bytes, _coef_sink: dict | None = None) -> np.ndarray:
             sp_ah = body[3 + 2 * ns] >> 4
             sp_al = body[3 + 2 * ns] & 0x0F
             all_cids = {cid for cid, *_ in frame[2]}
-            if arith:
-                from neo4j_to_clickhouse_spark.operators import jpeg_arith
-
-                if not set(scan) <= all_cids:
-                    raise ValueError(
-                        "scan references unknown component ids"
-                    )
-                if len(scan) not in (1, len(all_cids)):
-                    raise ValueError(
-                        "partially interleaved JPEG scans are not "
-                        "supported"
-                    )
-                if not progressive and decoded & set(scan):
-                    raise ValueError("component repeated across scans")
-                if prog_coefs is None:
-                    prog_coefs = _alloc_coefs(frame)
-                end = jpeg_arith.decode_scan(
-                    d, nxt, frame, scan, restart_interval, prog_coefs,
-                    sp_ss, sp_se, sp_ah, sp_al,
-                    sequential=not progressive,
-                    dc_cond={t: dac_dc.get(t, (0, 1)) for t in range(4)},
-                    ac_cond={t: dac_ac.get(t, 5) for t in range(4)},
-                )
-                if progressive:
-                    if sp_ss == 0 and sp_ah == 0:
-                        dc_scanned |= set(scan)
-                else:
-                    decoded |= set(scan)
-                    if decoded == all_cids:
-                        if _coef_sink is not None:
-                            _coef_sink["frame"] = frame
-                            _coef_sink["coefs"] = prog_coefs
-                        return _assemble_progressive(frame, prog_coefs, qt)
-                pos = end
-                continue
             if progressive:
                 if not set(scan) <= all_cids:
                     raise ValueError(

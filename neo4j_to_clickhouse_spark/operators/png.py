@@ -258,7 +258,8 @@ def is_apng(payload: bytes | None) -> bool:
 
 def apng_frame_delays(payload: bytes) -> list[int]:
     """Per-frame delays (ms) from the fcTL headers alone — the cheap
-    metadata walk (delay_den 0 means 100 per the spec)."""
+    metadata walk (delay_den 0 means 100 per the spec). A payload
+    truncated inside an fcTL yields the delays before it."""
     if not is_apng(payload):
         raise ValueError("not an APNG")
     out = []
@@ -266,6 +267,8 @@ def apng_frame_delays(payload: bytes) -> list[int]:
     while pos + 8 <= len(payload):
         length, ctype = struct.unpack_from(">I4s", payload, pos)
         if ctype == b"fcTL" and length >= 26:
+            if pos + 32 > len(payload):
+                break  # truncated mid-header: keep the delays read so far
             num, den = struct.unpack_from(">HH", payload, pos + 8 + 20)
             out.append(round(1000 * num / (den or 100)))
         if ctype == b"IEND":

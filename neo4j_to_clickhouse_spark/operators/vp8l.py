@@ -2,7 +2,7 @@
 
 Closes the WebP half of the reference pipeline's opaque-media boundary
 (SURVEY.md §2; the reference stores media as opaque bytes and never
-decodes — WebP-lossless joins BMP/PPM/JPEG/PNG/GIF/TIFF as a REAL
+decodes — WebP-lossless joins BMP/PPM/JPEG/PNG/GIF as a REAL
 pure-stdlib decode path behind :func:`multimodal.decode_image`,
 leaving only formats that genuinely need external DSP codecs stubbed:
 lossy VP8, AVIF, H.264/VP9/AV1).
@@ -688,10 +688,7 @@ def _inverse_color_indexing(t: _Transform, pixels: np.ndarray) -> np.ndarray:
 
 def _decode_argb_body(br: _BitReader, width: int, height: int) -> np.ndarray:
     """Decode a headerless VP8L image body (optional transforms +
-    entropy-coded ARGB) into a flat uint32 array. Shared by the full
-    VP8L path and the lossy container's ALPH chunk, whose alpha plane
-    is coded as exactly such a headerless stream (dimensions implied
-    by the frame)."""
+    entropy-coded ARGB) into a flat uint32 array."""
     transforms: list[_Transform] = []
     pixels = _decode_level0(br, width, height, transforms)
     for t in reversed(transforms):
@@ -704,64 +701,6 @@ def _decode_argb_body(br: _BitReader, width: int, height: int) -> np.ndarray:
         elif t.kind == _PREDICTOR:
             pixels = _inverse_predictor(t, pixels)
     return pixels
-
-
-def decode_alpha_plane(body: bytes, width: int, height: int) -> np.ndarray:
-    """Decode a lossy-WebP ``ALPH`` chunk body into an HxW uint8 alpha
-    plane (WebP container spec; the lossless backend is RFC 9649's
-    entropy coding with the alpha value in the green channel).
-
-    Header byte: bits 0-1 compression (0 = raw bytes, 1 = headerless
-    VP8L), bits 2-3 filtering method, bits 4-5 preprocessing (encoder-
-    side level reduction — nothing to invert). Filtering predicts each
-    pixel from reconstructed neighbours, added mod 256: the top-left
-    pixel from 0, the rest of row 0 from the left, the rest of column 0
-    from above, and interior pixels per the method (left / above /
-    gradient clamp(a+b-c))."""
-    if not body:
-        raise ValueError("empty ALPH chunk")
-    head = body[0]
-    compression = head & 0x3
-    filtering = (head >> 2) & 0x3
-    if compression == 0:
-        if len(body) < 1 + width * height:
-            raise ValueError("raw ALPH chunk shorter than the alpha plane")
-        plane = np.frombuffer(
-            body, np.uint8, count=width * height, offset=1
-        ).reshape(height, width).astype(np.int32)
-    elif compression == 1:
-        pixels = _decode_argb_body(_BitReader(body, 1), width, height)
-        plane = (
-            (pixels.reshape(height, width) >> np.uint32(8)) & np.uint32(0xFF)
-        ).astype(np.int32)
-    else:
-        raise ValueError(f"reserved ALPH compression method {compression}")
-    if filtering == 1:
-        # horizontal: column 0 predicts from above (cumsum down), then
-        # every row predicts from the left (cumsum across, mod 256 —
-        # modular addition commutes with the running sum)
-        plane[:, 0] = np.cumsum(plane[:, 0], dtype=np.int64) & 0xFF
-        plane = np.cumsum(plane, axis=1, dtype=np.int64) & 0xFF
-    elif filtering == 2:
-        # vertical: row 0 predicts from the left, then every column
-        # predicts from above
-        plane[0, :] = np.cumsum(plane[0, :], dtype=np.int64) & 0xFF
-        plane = np.cumsum(plane, axis=0, dtype=np.int64) & 0xFF
-    elif filtering == 3:
-        # gradient clamp(left+above-aboveleft): the left dependency is
-        # sequential within a row, so invert row-by-row (row 0 /
-        # column 0 still use plain horizontal/vertical prediction)
-        plane[0, :] = np.cumsum(plane[0, :], dtype=np.int64) & 0xFF
-        plane[:, 0] = np.cumsum(plane[:, 0], dtype=np.int64) & 0xFF
-        for y in range(1, height):
-            row = plane[y]
-            above = plane[y - 1]
-            left = int(row[0])
-            for x in range(1, width):
-                g = left + int(above[x]) - int(above[x - 1])
-                left = (int(row[x]) + min(255, max(0, g))) & 0xFF
-                row[x] = left
-    return plane.astype(np.uint8)
 
 
 def decode_vp8l(payload: bytes) -> np.ndarray:
@@ -804,9 +743,8 @@ def _decode_level0(
 def decode_webp(payload: bytes) -> np.ndarray:
     """Decode a WebP container into an HxWx3 uint8 RGB array (alpha
     dropped, as with the other first-frame decoders). Lossless (VP8L)
-    payloads decode here; lossy (VP8) payloads route to the native
-    keyframe decoder in :mod:`.vp8`; animated files return the first
-    composed frame."""
+    payloads decode here; lossy (VP8) payloads raise ``ValueError``;
+    animated files return the first composed frame."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP container")
     if is_animated_webp(payload):
@@ -823,22 +761,15 @@ def decode_webp(payload: bytes) -> np.ndarray:
             rgba = decode_vp8l(body)
             return rgba[..., :3].copy()
         if tag == b"VP8 ":
-            from neo4j_to_clickhouse_spark.operators.vp8 import (
-                _yuv_to_rgb,
-                decode_vp8_frame,
-            )
-
-            return _yuv_to_rgb(*decode_vp8_frame(body))
+            raise ValueError("lossy VP8 WebP is not supported")
         off += 8 + size + (size & 1)  # chunks are even-padded
     raise ValueError("no VP8/VP8L chunk in WebP container")
 
 
 def decode_webp_rgba(payload: bytes) -> np.ndarray:
-    """Decode a WebP container into an HxWx4 uint8 RGBA array. VP8L
-    carries alpha inline; lossy (VP8) frames take theirs from the
-    ``ALPH`` chunk of a VP8X-extended container (decoded by
-    :func:`decode_alpha_plane`) and are opaque without one. Animated
-    files return the first composed frame."""
+    """Decode a WebP container into an HxWx4 uint8 RGBA array (VP8L
+    carries alpha inline; lossy VP8 payloads raise ``ValueError``).
+    Animated files return the first composed frame."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP container")
     if is_animated_webp(payload):
@@ -847,29 +778,14 @@ def decode_webp_rgba(payload: bytes) -> np.ndarray:
     riff_size = struct.unpack_from("<I", payload, 4)[0]
     end = min(len(payload), 8 + riff_size)
     off = 12
-    alpha_body: bytes | None = None
     while off + 8 <= end:
         tag = payload[off : off + 4]
         size = struct.unpack_from("<I", payload, off + 4)[0]
         body = payload[off + 8 : off + 8 + size]
         if tag == b"VP8L":
             return decode_vp8l(body)
-        if tag == b"ALPH":
-            alpha_body = body  # precedes the VP8 chunk per the spec
-        elif tag == b"VP8 ":
-            from neo4j_to_clickhouse_spark.operators.vp8 import (
-                _yuv_to_rgb,
-                decode_vp8_frame,
-            )
-
-            y, u, v = decode_vp8_frame(body)
-            rgb = _yuv_to_rgb(y, u, v)
-            h, w = rgb.shape[:2]
-            if alpha_body is not None:
-                alpha = decode_alpha_plane(alpha_body, w, h)
-            else:
-                alpha = np.full((h, w), 255, np.uint8)
-            return np.dstack([rgb, alpha])
+        if tag == b"VP8 ":
+            raise ValueError("lossy VP8 WebP is not supported")
         off += 8 + size + (size & 1)
     raise ValueError("no VP8/VP8L chunk in WebP container")
 
@@ -927,8 +843,8 @@ def decode_webp_frames(
     rectangle (blend flag 0x02 = do-not-blend); after emitting, a
     frame with disposal flag 0x01 clears its rectangle back to
     transparent black. Frame data is decoded by handing the ANMF's
-    subchunks (optional ALPH + VP8/VP8L) back to the single-frame
-    decoders in a synthesized container."""
+    subchunks back to the single-frame decoder in a synthesized
+    container (lossy VP8 frames raise ``ValueError``)."""
     if not is_animated_webp(payload):
         raise ValueError("not an animated WebP")
     cw = (int.from_bytes(payload[24:27], "little") + 1)
@@ -947,16 +863,8 @@ def decode_webp_frames(
         flags = body[15]
         if fx + fw > cw or fy + fh > ch:
             raise ValueError("ANMF frame exceeds the canvas")
-        # frame data = subchunks; rewrap so the still decoders apply
-        sub = body[16:]
-        inner = b"WEBP"
-        if sub[:4] == b"ALPH":
-            # lossy + alpha: needs the VP8X alpha route
-            vp8x = b"VP8X" + struct.pack("<I", 10) + bytes(
-                [0x10, 0, 0, 0]
-            ) + (fw - 1).to_bytes(3, "little") + (fh - 1).to_bytes(3, "little")
-            inner += vp8x
-        inner += sub
+        # frame data = subchunks; rewrap so the still decoder applies
+        inner = b"WEBP" + body[16:]
         frame = decode_webp_rgba(
             b"RIFF" + struct.pack("<I", len(inner)) + inner
         )

@@ -14,6 +14,11 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+# The session's 48g driver-heap default is sized for the 128 GiB bench
+# host; on a ~15 GiB machine the JVM heap outgrows host memory mid-suite
+# and the kernel kills it, failing every later test. The fixtures are
+# tiny, so a small heap keeps the whole suite on one live JVM.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 from neo4j_to_clickhouse_spark.session import get_spark  # noqa: E402
 

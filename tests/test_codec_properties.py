@@ -14,69 +14,6 @@ from hypothesis import strategies as st
 _SETTINGS = {"max_examples": 60, "deadline": None}
 
 
-@given(st.binary(min_size=0, max_size=4000))
-@settings(**_SETTINGS)
-def test_tiff_lzw_roundtrip(data):
-    from neo4j_to_clickhouse_spark.operators.tiff import (
-        _tiff_lzw_decode,
-        _tiff_lzw_encode,
-    )
-
-    assert _tiff_lzw_decode(_tiff_lzw_encode(data), len(data)) == data
-
-
-@given(
-    st.integers(min_value=0, max_value=7),
-    st.integers(min_value=200, max_value=20000),
-)
-@settings(max_examples=12, deadline=None)
-def test_tiff_lzw_low_entropy_crosses_width_boundaries(seed, n):
-    """Low-entropy streams drive the table through every width bump
-    (and past the 12-bit reset at the large end)."""
-    from neo4j_to_clickhouse_spark.operators.tiff import (
-        _tiff_lzw_decode,
-        _tiff_lzw_encode,
-    )
-
-    rng = np.random.default_rng(seed)
-    data = bytes(rng.integers(0, 5, n, dtype=np.uint8))
-    assert _tiff_lzw_decode(_tiff_lzw_encode(data), len(data)) == data
-
-
-@given(st.binary(min_size=0, max_size=2000))
-@settings(**_SETTINGS)
-def test_tiff_packbits_roundtrip(data):
-    from neo4j_to_clickhouse_spark.operators.tiff import (
-        _packbits_decode,
-        _packbits_encode,
-    )
-
-    assert _packbits_decode(_packbits_encode(data), len(data)) == data
-
-
-@given(
-    st.integers(min_value=1, max_value=40),
-    st.integers(min_value=1, max_value=40),
-    st.sampled_from(["none", "packbits", "deflate", "lzw"]),
-    st.booleans(),
-    st.integers(min_value=1, max_value=9),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_tiff_encode_decode_any_geometry(w, h, comp, pred2, rps, seed):
-    from neo4j_to_clickhouse_spark.operators.tiff import (
-        decode_tiff,
-        encode_tiff,
-    )
-
-    pred = 2 if (pred2 and comp in ("lzw", "deflate")) else 1
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert np.array_equal(
-        decode_tiff(encode_tiff(img, comp, pred, rps)), img
-    )
-
-
 @given(
     st.integers(min_value=1, max_value=20),
     st.integers(min_value=1, max_value=20),
