@@ -1,17 +1,12 @@
-"""Pure-Python MJPEG-in-AVI container codec (Microsoft RIFF/AVI spec).
+"""Header-only MJPEG-in-AVI probe (Microsoft RIFF/AVI spec).
 
-Closes the video codec hole for ONE real format: Motion-JPEG inside an
-AVI container is just RIFF chunk framing around per-frame baseline JPEG
-payloads — no inter-frame prediction, no external codec. Each frame
-decodes through the sibling :mod:`.jpeg` module, so
-:func:`.multimodal.sample_frames` can do REAL frame extraction for
-MJPEG/AVI assets while H.264/VP9/AV1 remain the documented
-external-dependency boundary (ffmpeg).
-
-Layout read: ``RIFF('AVI ') > LIST('hdrl') > 'avih'`` for the
-per-frame period, then ``LIST('movi')`` for ``##dc``/``##db`` frame
-chunks. The parser is lenient about optional lists (``idx1``, ``strl``
-details) — it needs only the frame period and the frame chunks.
+Motion-JPEG inside an AVI container is RIFF chunk framing around
+per-frame JPEG payloads, so frame count and duration are readable from
+the chunk headers alone: ``RIFF('AVI ') > LIST('hdrl') > 'avih'`` for
+the per-frame period, then ``LIST('movi')`` for the ``##dc``/``##db``
+frame chunks. The walk is lenient about optional lists (``idx1``,
+``strl`` details) and never decodes a frame; other video FourCCs
+(H.264/VP9/AV1) are the ffmpeg boundary and probe to None.
 """
 
 from __future__ import annotations
@@ -30,20 +25,19 @@ def is_avi(payload: bytes | None) -> bool:
     )
 
 
-def parse_avi_mjpeg(payload: bytes) -> tuple[int, list[bytes]]:
-    """Parse an MJPEG AVI into ``(frame_period_ms, [jpeg_bytes, ...])``.
-
-    Raises ``ValueError`` for non-AVI input, a missing ``avih`` header,
-    or frame chunks that are not JPEG (this parser is MJPEG-only; other
-    FourCCs are the ffmpeg boundary).
-    """
+def probe_avi(payload: bytes) -> tuple[int, int] | None:
+    """(n_frames, duration_ms) if the payload is a well-formed MJPEG
+    AVI, else None — the :func:`.multimodal.probe_assets` contract.
+    None covers non-AVI input, a missing or short ``avih``, a chunk
+    overrunning its list, and a frame chunk that does not open with a
+    JPEG SOI marker."""
     if not is_avi(payload):
-        raise ValueError("not a RIFF/AVI payload")
+        return None
     period_us = None
-    frames: list[bytes] = []
+    n_frames = 0
 
     def walk(pos: int, end: int) -> None:
-        nonlocal period_us
+        nonlocal period_us, n_frames
         while pos + 8 <= end:
             cid, size = struct.unpack_from("<4sI", payload, pos)
             body_start = pos + 8
@@ -58,53 +52,15 @@ def parse_avi_mjpeg(payload: bytes) -> tuple[int, list[bytes]]:
                     raise ValueError("truncated avih header")
                 period_us = struct.unpack_from("<I", payload, body_start)[0]
             elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
-                frame = payload[body_start:body_end]
-                if frame[:2] != b"\xff\xd8":
-                    raise ValueError(
-                        "non-JPEG frame chunk: only MJPEG AVIs are "
-                        "supported without ffmpeg"
-                    )
-                frames.append(frame)
+                if size < 2 or payload[body_start : body_start + 2] != b"\xff\xd8":
+                    raise ValueError("non-JPEG frame chunk")
+                n_frames += 1
             pos = body_end + (size & 1)  # chunks are word-aligned
 
-    walk(12, min(len(payload), 8 + struct.unpack_from("<I", payload, 4)[0]))
-    if period_us is None:
-        raise ValueError("missing avih header")
-    return (max(period_us // 1000, 1), frames)
-
-
-def probe_avi(payload: bytes) -> tuple[int, int] | None:
-    """(n_frames, duration_ms) if the payload is a parseable MJPEG AVI,
-    else None — the :func:`.multimodal.probe_assets` contract."""
     try:
-        period_ms, frames = parse_avi_mjpeg(payload)
+        walk(12, min(len(payload), 8 + struct.unpack_from("<I", payload, 4)[0]))
     except (ValueError, struct.error, IndexError):
         return None
-    return (len(frames), period_ms * len(frames))
-
-
-def encode_avi_mjpeg(frames: list[bytes], fps: int = 10) -> bytes:
-    """Wrap baseline-JPEG frames in a minimal MJPEG AVI (fixture helper;
-    pair with :func:`.jpeg.encode_jpeg_flat` for analytically-known
-    frame content)."""
-    if fps < 1:
-        raise ValueError(f"fps must be >= 1, got {fps}")
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps,  # dwMicroSecPerFrame
-        0, 0, 0x10,        # maxbytes, padding, flags (AVIF_HASINDEX off)
-        len(frames), 0, 1, 0x100000,  # total frames, initial, streams, bufsize
-        0, 0, 0, 0, 0, 0,  # width/height/reserved (prober reads the JPEG)
-    )
-    movi = b"".join(chunk(b"00dc", f) for f in frames)
-    body = lst(b"hdrl", chunk(b"avih", avih)) + lst(b"movi", movi)
-    return b"RIFF" + struct.pack("<I", len(body) + 4) + b"AVI " + body
+    if period_us is None:
+        return None
+    return (n_frames, max(period_us // 1000, 1) * n_frames)

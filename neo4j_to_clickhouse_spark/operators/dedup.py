@@ -456,7 +456,8 @@ def span_digest_rows(
     ``(id_col[, start][, *extras], span)`` with ``span`` the md5 hex of
     the space-joined span text — bit-identical to the JVM
     ``tokens -> ngram_array -> posexplode -> md5`` pipeline (pinned in
-    ``tools/ab_span_digests.py`` and ``tests/test_dedup_spans.py``).
+    ``tests/test_dedup_spans.py``; the row set itself is pinned by digest
+    in ``tests/test_shingle_contracts.py``).
 
     Why Python here (guide §4.2, r15 optimization round): the JVM span
     build runs ``w-1`` interpreted ``zip_with`` rounds per row — each

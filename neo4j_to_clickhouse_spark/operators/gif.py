@@ -3,7 +3,7 @@ spec): LZW decoder for the first frame and a palette LZW encoder.
 
 Closes one more of the reference pipeline's opaque-media boundaries
 (SURVEY.md §2; the reference stores media as opaque bytes and never
-decodes — here GIF joins BMP/PPM/JPEG/PNG as a REAL pure-stdlib decode
+decodes — here GIF joins BMP/PPM/PNG as a REAL pure-stdlib decode
 path behind :func:`multimodal.decode_image`, leaving only formats that
 genuinely need external codecs stubbed).
 
@@ -294,117 +294,13 @@ def decode_gif(payload: bytes) -> np.ndarray:
         return canvas
 
 
-def decode_gif_frames(
-    payload: bytes,
-) -> tuple[list[int], list[np.ndarray]]:
-    """Decode ALL frames of a GIF87a/89a animation as composed
-    logical-screen canvases.
-
-    Returns ``(delays_ms, canvases)`` — one HxWx3 uint8 RGB canvas per
-    frame, composed per GIF89a §23 graphics-control semantics: frames
-    draw into the running canvas at their (left, top) rect, indices
-    equal to the GCE transparent index are skipped, and after each
-    frame the disposal method applies (0/1 leave, 2 restore the rect to
-    the background color, 3 restore the pre-frame canvas). Delays are
-    raw GCE centiseconds x 10 (0 preserved; samplers apply their own
-    minimum, as browsers do). Single-frame streams return one canvas
-    identical to :func:`decode_gif`."""
-    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF87a/GIF89a stream")
-    sw, sh, packed, bg_index, _aspect = struct.unpack_from(
-        "<HHBBB", payload, 6
-    )
-    if sw == 0 or sh == 0:
-        raise ValueError("empty GIF logical screen")
-    off = 13
-    gct = None
-    if packed & 0x80:
-        gct, off = _read_color_table(payload, off, packed)
-    bg = (
-        gct[bg_index]
-        if gct is not None and bg_index < gct.shape[0]
-        else np.zeros(3, np.uint8)
-    )
-    canvas = np.empty((sh, sw, 3), np.uint8)
-    canvas[:] = bg
-
-    delays: list[int] = []
-    frames: list[np.ndarray] = []
-    # pending graphics-control state (applies to the NEXT image block)
-    delay_cs = 0
-    disposal = 0
-    transparent: int | None = None
-    while True:
-        if off >= len(payload):
-            if frames:
-                return delays, frames  # missing trailer: tolerate
-            raise ValueError("GIF ended without an image block")
-        block = payload[off]
-        off += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:
-            if off >= len(payload):
-                raise ValueError("truncated GIF extension")
-            label = payload[off]
-            if label == 0xF9 and off + 5 < len(payload):
-                gpacked = payload[off + 2]
-                delay_cs = struct.unpack_from("<H", payload, off + 3)[0]
-                disposal = (gpacked >> 2) & 0x7
-                transparent = payload[off + 5] if gpacked & 1 else None
-            off = _skip_subblocks(payload, off + 1)
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-        left, top, w, h, ipacked = struct.unpack_from("<HHHHB", payload, off)
-        off += 9
-        if w == 0 or h == 0 or left + w > sw or top + h > sh:
-            raise ValueError("GIF frame exceeds the logical screen")
-        palette = gct
-        if ipacked & 0x80:
-            palette, off = _read_color_table(payload, off, ipacked)
-        if palette is None:
-            raise ValueError("GIF image has no color table")
-        if off >= len(payload):
-            raise ValueError("truncated GIF image data")
-        min_code_size = payload[off]
-        data, off = _read_subblocks(payload, off + 1)
-        indices = np.frombuffer(
-            _lzw_decode(data, min_code_size, w * h), np.uint8
-        )
-        if indices.max(initial=0) >= palette.shape[0]:
-            raise ValueError("GIF pixel index outside the color table")
-        idx = indices.reshape(h, w)
-        rows = palette[idx]
-        if ipacked & 0x40:
-            rows = _deinterlace(rows)
-            idx = _deinterlace(idx[..., None])[..., 0]
-        saved = canvas.copy() if disposal == 3 else None
-        region = canvas[top : top + h, left : left + w]
-        if transparent is not None:
-            opaque = idx != transparent
-            region[opaque] = rows[opaque]
-        else:
-            region[:] = rows
-        frames.append(canvas.copy())
-        delays.append(delay_cs * 10)
-        if disposal == 2:
-            canvas[top : top + h, left : left + w] = bg
-        elif disposal == 3 and saved is not None:
-            canvas = saved
-        delay_cs, disposal, transparent = 0, 0, None
-    if not frames:
-        raise ValueError("GIF contains no image data")
-    return delays, frames
-
-
 def encode_gif_animation(
     frames: list[dict],
     screen: tuple[int, int] | None = None,
     bg_rgb: tuple[int, int, int] = (0, 0, 0),
 ) -> bytes:
     """Fixture encoder for animation tests (house pattern, like
-    ``encode_jpeg_flat``): each frame dict has ``pixels`` (hxwx3
+    ``encode_apng``): each frame dict has ``pixels`` (hxwx3
     uint8), optional ``left``/``top``, ``delay_cs``, ``disposal``, and
     ``mask`` (bool hxw — False pixels are written as the transparent
     index and left undrawn). One shared global palette; index 255 is

@@ -1,36 +1,19 @@
-"""Optional libheif decode path for AVIF/HEIC payloads (ctypes, no pip).
+"""Optional libheif handle probe for AVIF/HEIC payloads (ctypes, no pip).
 
 The pure-Python stack reads AVIF/HEIC at the CONTAINER level
-(:mod:`.isobmff`: dims, depth, alpha, codec — zero codec work); PIXEL
-decode of the AV1/HEVC payload is genuinely DSP-bound, the documented
-external-codec boundary. This module closes that boundary *when the
-host has libheif* (the standard system decoder, dav1d/libde265
-backends), exactly like the optional Pillow fast path in
-``multimodal._decode_jpeg_any``: pure ctypes against the public C API
-(libheif.h, stable since 1.x), no bundled code, and every entry point
-degrades to "not available" when the library is absent — the
-Spark-side plumbing and the container probers never depend on it.
-
-Reference parity: the reference stores media as opaque bytes and
-defers decode to workers; here decode is an executor-local library
-call inside the same Arrow-batched operators.
-
-Enum constants are the public ABI values from libheif.h
-(heif_colorspace/heif_chroma/heif_channel/heif_compression_format).
+(:mod:`.isobmff`: dims, depth, alpha, codec — zero codec work). For
+HEIF stills whose item tree that walk cannot size, this module asks the
+system libheif (when the host has it) for the primary image handle's
+dims, alpha and luma depth — still no pixel decode. Pure ctypes against
+the public C API (libheif.h, stable since 1.x), no bundled code, and
+every entry point degrades to "not available" when the library is
+absent — the Spark-side plumbing and the container probers never depend
+on it.
 """
 
 from __future__ import annotations
 
 import ctypes
-
-import numpy as np
-
-_COLORSPACE_RGB = 1
-_CHROMA_INTERLEAVED_RGB = 10
-_CHROMA_INTERLEAVED_RGBA = 11
-_CHANNEL_INTERLEAVED = 10
-_COMPRESSION_HEVC = 1
-_COMPRESSION_AV1 = 4
 
 
 class _HeifError(ctypes.Structure):
@@ -58,25 +41,6 @@ def _load():
         "heif_image_handle_has_alpha_channel": (ctypes.c_int, [p]),
         "heif_image_handle_get_luma_bits_per_pixel": (ctypes.c_int, [p]),
         "heif_image_handle_release": (None, [p]),
-        "heif_decode_image": (e, [p, ctypes.POINTER(p), ctypes.c_int, ctypes.c_int, p]),
-        "heif_image_get_plane_readonly": (
-            ctypes.POINTER(ctypes.c_uint8),
-            [p, ctypes.c_int, ctypes.POINTER(ctypes.c_int)],
-        ),
-        "heif_image_release": (None, [p]),
-        # fixture-encoder surface (tests only)
-        "heif_image_create": (e, [ctypes.c_int, ctypes.c_int, ctypes.c_int, ctypes.c_int, ctypes.POINTER(p)]),
-        "heif_image_add_plane": (e, [p, ctypes.c_int, ctypes.c_int, ctypes.c_int, ctypes.c_int]),
-        "heif_image_get_plane": (
-            ctypes.POINTER(ctypes.c_uint8),
-            [p, ctypes.c_int, ctypes.POINTER(ctypes.c_int)],
-        ),
-        "heif_context_get_encoder_for_format": (e, [p, ctypes.c_int, ctypes.POINTER(p)]),
-        "heif_encoder_set_lossless": (e, [p, ctypes.c_int]),
-        "heif_encoder_set_lossy_quality": (e, [p, ctypes.c_int]),
-        "heif_encoder_release": (None, [p]),
-        "heif_context_encode_image": (e, [p, p, p, p, ctypes.POINTER(p)]),
-        "heif_context_write_to_file": (e, [p, ctypes.c_char_p]),
     }
     for name, (restype, argtypes) in sigs.items():
         try:
@@ -96,80 +60,18 @@ def available() -> bool:
 
 
 def _check(err: _HeifError, what: str) -> None:
+    """Raise ValueError for a failed libheif call (shared with the test
+    fixture encoder in ``tests/helpers/libheif.py``)."""
     if err.code != 0:
         msg = (err.message or b"?").decode("utf-8", "replace")
         raise ValueError(f"libheif {what} failed: {msg} (code {err.code})")
 
 
-def decode_heif(payload: bytes, rgba: bool = False) -> np.ndarray:
-    """Decode an AVIF/HEIC payload to HxWx3 RGB (or HxWx4 RGBA) uint8.
-
-    Raises ValueError on any decode failure (the ``decode_image``
-    fallback contract) and RuntimeError when libheif is absent —
-    callers gate on :func:`available`.
-    """
-    if _LIB is None:
-        raise RuntimeError("libheif not available on this host")
-    lib = _LIB
-    ctx = lib.heif_context_alloc()
-    if not ctx:
-        raise ValueError("libheif context allocation failed")
-    handle = ctypes.c_void_p()
-    img = ctypes.c_void_p()
-    try:
-        _check(
-            lib.heif_context_read_from_memory(
-                ctx, payload, len(payload), None
-            ),
-            "read",
-        )
-        _check(
-            lib.heif_context_get_primary_image_handle(
-                ctx, ctypes.byref(handle)
-            ),
-            "primary handle",
-        )
-        want_alpha = rgba and lib.heif_image_handle_has_alpha_channel(handle)
-        chroma = (
-            _CHROMA_INTERLEAVED_RGBA if rgba else _CHROMA_INTERLEAVED_RGB
-        )
-        nch = 4 if rgba else 3
-        _check(
-            lib.heif_decode_image(
-                handle, ctypes.byref(img), _COLORSPACE_RGB, chroma, None
-            ),
-            "decode",
-        )
-        w = lib.heif_image_handle_get_width(handle)
-        h = lib.heif_image_handle_get_height(handle)
-        stride = ctypes.c_int()
-        plane = lib.heif_image_get_plane_readonly(
-            img, _CHANNEL_INTERLEAVED, ctypes.byref(stride)
-        )
-        if not plane or w <= 0 or h <= 0:
-            raise ValueError("libheif returned an empty plane")
-        buf = ctypes.string_at(plane, stride.value * h)
-        arr = (
-            np.frombuffer(buf, np.uint8)
-            .reshape(h, stride.value)[:, : w * nch]
-            .reshape(h, w, nch)
-            .copy()
-        )
-        if rgba and not want_alpha:
-            arr[..., 3] = 255
-        return arr
-    finally:
-        if img:
-            lib.heif_image_release(img)
-        if handle:
-            lib.heif_image_handle_release(handle)
-        lib.heif_context_free(ctx)
-
-
 def probe_heif(payload: bytes) -> dict | None:
     """Handle-level metadata without a pixel decode (dims, alpha, luma
     bit depth). Returns None when libheif is absent or rejects the
-    payload — callers fall back to the pure-Python container probe."""
+    payload. :func:`.multimodal.probe_image_dims` asks it only after the
+    pure-Python container walk found no primary-item ``ispe``."""
     if _LIB is None:
         return None
     lib = _LIB
@@ -192,92 +94,3 @@ def probe_heif(payload: bytes) -> dict | None:
         if handle:
             lib.heif_image_handle_release(handle)
         lib.heif_context_free(ctx)
-
-
-def encode_heif(
-    pixels: np.ndarray,
-    codec: str = "av1",
-    lossless: bool = True,
-    quality: int = 90,
-) -> bytes:
-    """Fixture encoder (tests only, like ``multimodal.encode_bmp``):
-    RGB(A) uint8 array -> AVIF (``codec='av1'``) or HEIC (``'hevc'``)
-    bytes via the system encoders (aom/x265). Writes through a temp
-    file because this libheif build lacks write-to-memory."""
-    if _LIB is None:
-        raise RuntimeError("libheif not available on this host")
-    import os
-    import tempfile
-
-    lib = _LIB
-    h, w, nch = pixels.shape
-    chroma = (
-        _CHROMA_INTERLEAVED_RGBA if nch == 4 else _CHROMA_INTERLEAVED_RGB
-    )
-    img = ctypes.c_void_p()
-    _check(
-        lib.heif_image_create(
-            w, h, _COLORSPACE_RGB, chroma, ctypes.byref(img)
-        ),
-        "image create",
-    )
-    ctx = lib.heif_context_alloc()
-    encoder = ctypes.c_void_p()
-    out_handle = ctypes.c_void_p()
-    tmp = tempfile.NamedTemporaryFile(suffix=".heif", delete=False)
-    tmp.close()
-    try:
-        _check(
-            lib.heif_image_add_plane(img, _CHANNEL_INTERLEAVED, w, h, 8),
-            "add plane",
-        )
-        stride = ctypes.c_int()
-        plane = lib.heif_image_get_plane(
-            img, _CHANNEL_INTERLEAVED, ctypes.byref(stride)
-        )
-        row_bytes = w * nch
-        src = np.ascontiguousarray(pixels, dtype=np.uint8)
-        for y in range(h):
-            ctypes.memmove(
-                ctypes.addressof(plane.contents) + y * stride.value,
-                src[y].ctypes.data,
-                row_bytes,
-            )
-        fmt = _COMPRESSION_AV1 if codec == "av1" else _COMPRESSION_HEVC
-        _check(
-            lib.heif_context_get_encoder_for_format(
-                ctx, fmt, ctypes.byref(encoder)
-            ),
-            "get encoder",
-        )
-        if lossless:
-            _check(lib.heif_encoder_set_lossless(encoder, 1), "lossless")
-            _check(
-                lib.heif_encoder_set_lossy_quality(encoder, 100), "quality"
-            )
-        else:
-            _check(
-                lib.heif_encoder_set_lossy_quality(encoder, quality),
-                "quality",
-            )
-        _check(
-            lib.heif_context_encode_image(
-                ctx, img, encoder, None, ctypes.byref(out_handle)
-            ),
-            "encode",
-        )
-        _check(
-            lib.heif_context_write_to_file(ctx, tmp.name.encode()),
-            "write",
-        )
-        with open(tmp.name, "rb") as fh:
-            return fh.read()
-    finally:
-        os.unlink(tmp.name)
-        if out_handle:
-            lib.heif_image_handle_release(out_handle)
-        if encoder:
-            lib.heif_encoder_release(encoder)
-        lib.heif_context_free(ctx)
-        if img:
-            lib.heif_image_release(img)

@@ -6,14 +6,14 @@ that survives 100 TB — payload bytes move through Arrow record batches,
 metadata stays queryable without touching payloads (column pruning means a
 metadata-only query never reads a single payload byte from parquet).
 
-Decode/resize/frame-sample are Arrow-batched ``mapInPandas`` operators.
-Most decode paths are REAL (native pure-Python codecs below, plus the
-optional system libheif for AVIF/HEIC/AV1/HEVC); what remains outside
-them is stubbed: ``decode_stub='fake'`` produces a deterministic
-stand-in from the payload hash (real Spark plumbing, fake pixels);
-``decode_stub='raise'`` raises NotImplementedError where the external
-codec call belongs. Everything around the stub — schema, batching,
-partitioning, output contract — is production-shaped and tested.
+Feature extraction and the header probe are Arrow-batched
+``mapInPandas`` operators. Decode is REAL for the formats the native
+pure-Python codecs below cover; everything else is stubbed:
+``decode_stub='fake'`` produces a deterministic stand-in from the
+payload hash (real Spark plumbing, fake pixels); ``decode_stub='raise'``
+raises NotImplementedError where the external codec call belongs.
+Everything around the stub — schema, batching, partitioning, output
+contract — is production-shaped and tested.
 """
 
 from __future__ import annotations
@@ -31,36 +31,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-# --- dependency-free image codecs (BMP/PPM/JPEG/PNG/GIF/WebP-lossless) -----
+# --- dependency-free image codecs (BMP/PPM/PNG/GIF/WebP-lossless) ---------
 # The container ships no Pillow/ffmpeg, but uncompressed 24-bit BMP and
-# binary PPM (P6) need only `struct` + numpy, baseline+progressive JPEG
-# needs only the public T.81 spec (sibling :mod:`.jpeg`), PNG needs only
-# stdlib zlib (sibling :mod:`.png`), GIF LZW is pure arithmetic (sibling
-# :mod:`.gif`), and WebP-lossless is prefix codes + LZ77 + invertible
-# transforms (sibling :mod:`.vp8l`, RFC 9649) — so for those formats the
-# image path is REAL: decode -> pixel features / nearest-neighbor resize
-# -> re-encode. TIFF and lossy WebP are probed for dims only (no pixel
-# decode). AVIF and MP4 are probed + frame-sampled at
-# the ISOBMFF container level (sibling :mod:`.isobmff`: dims, duration,
-# keyframe-aligned codec-sample byte ranges, no codec work), and
-# AVIF/HEIC PIXEL decode goes through the system libheif when present
-# (sibling :mod:`.heif`, ctypes — the same optional-fast-path pattern
-# as Pillow for JPEG; container probe is the no-lib fallback). Video
-# keyframes decode for real in extract_video_frames — MJPEG-AVI via the
-# native JPEG decoder, AV1- and HEVC-in-MP4 by rewrapping each sync
-# sample as a single-item AVIF/HEIC (same bitstream) through the
-# libheif path. The hash stub remains for H.264/VP9 sample pixel
-# decode, TIFF, lossy WebP, and JPEG arithmetic/12-bit/hierarchical, or
-# any format on a host without its optional library.
+# binary PPM (P6) need only `struct` + numpy, PNG needs only stdlib zlib
+# (sibling :mod:`.png`), GIF LZW is pure arithmetic (sibling :mod:`.gif`),
+# and WebP-lossless is prefix codes + LZ77 + invertible transforms
+# (sibling :mod:`.vp8l`, RFC 9649) — so for those formats the pixel path
+# is REAL. JPEG, TIFF, lossy WebP and AVIF/HEIC stills are probed for
+# dims from their headers only (AVIF/HEIC through the ISOBMFF item tree,
+# sibling :mod:`.isobmff`, with the optional system libheif's handle
+# probe as the fallback, sibling :mod:`.heif`); MP4, AVI and animated
+# images are probed for duration from their container headers. Pixel
+# decode of those formats is the stub.
 
 
 def decode_image(payload: bytes | None) -> tuple[str, np.ndarray] | None:
     """Sniff + decode a payload into (format, HxWx3 uint8 RGB array).
-    Handles uncompressed 24-bit BMP, binary PPM, baseline JPEG
-    (pure-Python :mod:`.jpeg`, with Pillow as an optional fast path when
-    importable), PNG, GIF87a/89a first frames, WebP-lossless (VP8L),
-    and — when the system libheif is present — AVIF/HEIC stills. Returns None for everything
-    else — the caller falls back to its stub."""
+    Handles uncompressed BMP, binary PPM/PGM, PNG, GIF87a/89a first
+    frames and WebP-lossless (VP8L). Returns None for everything else —
+    the caller falls back to its stub."""
     if not payload or len(payload) < 2:
         return None
     try:
@@ -68,8 +57,6 @@ def decode_image(payload: bytes | None) -> tuple[str, np.ndarray] | None:
             return ("bmp", _decode_bmp(payload))
         if payload[:2] in (b"P5", b"P6"):
             return ("ppm", _decode_ppm(payload))
-        if payload[:2] == b"\xff\xd8":
-            return ("jpeg", _decode_jpeg_any(payload))
         if payload[:8] == b"\x89PNG\r\n\x1a\n":
             from neo4j_to_clickhouse_spark.operators.png import decode_png
 
@@ -82,46 +69,9 @@ def decode_image(payload: bytes | None) -> tuple[str, np.ndarray] | None:
             from neo4j_to_clickhouse_spark.operators.vp8l import decode_webp
 
             return ("webp", decode_webp(payload))
-        if len(payload) >= 12 and payload[4:8] == b"ftyp":
-            from neo4j_to_clickhouse_spark.operators import heif
-            from neo4j_to_clickhouse_spark.operators.isobmff import (
-                is_avif,
-                is_heif_still,
-            )
-
-            # AVIF/HEIC pixel decode via the system libheif when
-            # present (optional fast path like Pillow for JPEG); the
-            # pure-Python container probe stays the no-lib fallback
-            # for metadata, so decode-None here just means "stub".
-            if is_heif_still(payload) and heif.available():
-                fmt = "avif" if is_avif(payload) else "heic"
-                return (fmt, heif.decode_heif(payload))
     except (ValueError, struct.error, IndexError):
         return None
     return None
-
-
-def _decode_jpeg_any(payload: bytes) -> np.ndarray:
-    """JPEG decode: Pillow when available (libjpeg-turbo throughput),
-    else the pure-Python baseline decoder (:mod:`.jpeg`). Arithmetic /
-    12-bit / hierarchical streams raise ValueError on the pure path, which
-    :func:`decode_image` maps to the stub fallback."""
-    try:
-        from PIL import Image  # noqa: PLC0415 — optional, not in container
-    except ImportError:
-        from neo4j_to_clickhouse_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    import io
-
-    try:
-        with Image.open(io.BytesIO(payload)) as im:
-            return np.asarray(im.convert("RGB"))
-    except Exception as exc:  # PIL raises UnidentifiedImageError/OSError
-        # map to the decode-or-ValueError contract so decode_image falls
-        # back to the stub instead of failing the executor task
-        # (ADVICE r05)
-        raise ValueError(f"Pillow failed to decode JPEG payload: {exc}") from exc
 
 
 def _decode_bmp(buf: bytes) -> np.ndarray:
@@ -531,13 +481,6 @@ def _audio_feature(
     return [float(v) for v in feats[:dim]]
 
 
-def _resize_nearest(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
-    h, w, _ = pixels.shape
-    yi = (np.arange(height) * h // height).clip(max=h - 1)
-    xi = (np.arange(width) * w // width).clip(max=w - 1)
-    return pixels[yi][:, xi]
-
-
 def _pixel_feature(pixels: np.ndarray, dim: int) -> list[float]:
     """Deterministic pixel-derived feature in [0,1): per-channel means and
     stds, then a luminance histogram filling the remaining dims. Same
@@ -602,12 +545,13 @@ def _read_ifd_value(buf: bytes, bo: str, vtype: int, count: int, raw: bytes):
 
 def probe_image_dims(payload: bytes | None) -> tuple[int, int] | None:
     """Header-only (width, height) for every format :func:`decode_image`
-    handles, plus TIFF and lossy WebP — no entropy decode, no pixel
-    work, O(header bytes). The 100 TB metadata-probe path: a
-    dims/duration backfill over a billion assets must not decompress a
-    billion images. Always agrees with the decoded array's dims where a
-    decoder exists (pinned by tests); returns None for anything
-    unrecognized so the caller can fall back to a full decode."""
+    handles, plus JPEG, TIFF, lossy WebP and AVIF/HEIC stills — no
+    entropy decode, no pixel work, O(header bytes). The 100 TB
+    metadata-probe path: a dims/duration backfill over a billion assets
+    must not decompress a billion images. Always agrees with the decoded
+    array's dims where a decoder exists, and never returns None for a
+    payload the decoder accepts (both pinned by tests); returns None for
+    anything unrecognized or malformed."""
     if not payload or len(payload) < 8:
         return None
     try:
@@ -721,11 +665,11 @@ def probe_assets(assets: DataFrame) -> DataFrame:
     `duration_ms`) from the payloads themselves — header-only parses
     (:func:`probe_image_dims` + WAV/AVI/mvhd/ANMF/fcTL header walks),
     never pixel or sample decompression, so probing a billion assets
-    costs O(header bytes) each; unrecognized headers get one
-    full-decode fallback attempt. Arrow-batched ``mapInPandas`` over
-    the full asset schema — the metadata becomes queryable WITHOUT any
-    downstream reader touching payload bytes again (column pruning
-    serves metadata-only queries from parquet alone).
+    costs O(header bytes) each; unrecognized headers stay NULL.
+    Arrow-batched ``mapInPandas`` over the full asset schema — the
+    metadata becomes queryable WITHOUT any downstream reader touching
+    payload bytes again (column pruning serves metadata-only queries
+    from parquet alone).
     """
     schema = assets.schema
 
@@ -790,12 +734,6 @@ def probe_assets(assets: DataFrame) -> DataFrame:
                 # dims: header-only parse for every image format —
                 # the probe never decompresses pixel data
                 dims = probe_image_dims(payload)
-                if dims is None:
-                    # unrecognized headers: one full-decode attempt so
-                    # oddball-but-decodable payloads still probe
-                    img = decode_image(payload)
-                    if img is not None:
-                        dims = (img[1].shape[1], img[1].shape[0])
                 w, h = dims if dims is not None else (None, None)
                 # duration: header walks only (WAV fmt chunk, AVI avih,
                 # mvhd, ANMF headers, fcTL headers, FLAC STREAMINFO,
@@ -919,362 +857,3 @@ def extract_features(
 
     cols = assets.select("asset_id", "modality", "n_bytes", "payload")
     return cols.mapInPandas(run, FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    assets: DataFrame, width: int, height: int,
-    decode_stub: Literal["fake", "raise"] = "fake",
-) -> DataFrame:
-    """Image resize: binary in -> binary out with target dims.
-
-    BMP/PPM/PNG/GIF/WebP-lossless/baseline-JPEG payloads are REALLY
-    resized (nearest-neighbor). BMP, PNG, and WebP re-encode in their
-    own format; PPM, JPEG, and GIF re-encode as PPM (lossless
-    container — this module has no general JPEG *encoder*, only the
-    flat-block fixture helper). Other formats hit the stub ('fake' passes the payload through and stamps
-    the target dims — exercises schema/batching; 'raise' marks the codec
-    hole)."""
-
-    def one(payload):
-        decoded = decode_image(payload)
-        if decoded is not None:
-            fmt, pixels = decoded
-            resized = _resize_nearest(pixels, width, height)
-            if fmt == "bmp":
-                return encode_bmp(resized)
-            if fmt == "png":
-                from neo4j_to_clickhouse_spark.operators.png import encode_png
-
-                return encode_png(resized)
-            if fmt == "webp":
-                from neo4j_to_clickhouse_spark.operators.vp8l import (
-                    encode_webp,
-                )
-
-                return encode_webp(resized)
-            return encode_ppm(resized)
-        if decode_stub == "raise":
-            raise NotImplementedError(
-                "image codec not available: plug Pillow here"
-            )
-        return payload
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": [one(p) for p in pdf["payload"]],
-                }
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_ms", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    assets: DataFrame, every_ms: int = 1000,
-    decode_stub: Literal["fake", "raise"] = "fake",
-) -> DataFrame:
-    """Video frame sampling: one row out per sampled frame.
-
-    MJPEG-in-AVI payloads are sampled FOR REAL (RIFF parse via
-    :mod:`.avi`; the emitted frame payload is the container's actual
-    JPEG, decodable by :mod:`.jpeg`): one frame per ``every_ms`` of true
-    duration, nearest-frame selection. MP4 payloads are sampled FOR REAL
-    at the container level (:mod:`.isobmff`): the emitted payload is the
-    container's own codec sample (AV1 TU / H.264 AU byte range from
-    stsz/stsc/stco), keyframe-snapped — pixel decode of that sample
-    remains the external ffmpeg/dav1d boundary. Other formats hit the
-    stub ('fake' emits one payload-hash frame per `every_ms` of
-    n_bytes-derived duration; 'raise' marks the H.264/VP9 ffmpeg
-    boundary). Row explosion happens inside the executor either way, so
-    a 2-hour video never materializes as one row downstream.
-    """
-    from neo4j_to_clickhouse_spark.operators.avi import is_avi, parse_avi_mjpeg
-    from neo4j_to_clickhouse_spark.operators.isobmff import (
-        has_movie_box,
-        mp4_extract_samples,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            real = pdf["payload"].map(lambda p: is_avi(p))
-            for _, row in pdf[real].iterrows():
-                try:
-                    period_ms, frames = parse_avi_mjpeg(row["payload"])
-                except ValueError:
-                    if decode_stub == "raise":
-                        raise NotImplementedError(
-                            "non-MJPEG video codec not available: plug "
-                            "ffmpeg here"
-                        ) from None
-                    continue
-                if not frames:
-                    continue
-                dur = period_ms * len(frames)
-                ticks = range(0, dur, every_ms)
-                idx = [min(t // period_ms, len(frames) - 1) for t in ticks]
-                yield pd.DataFrame(
-                    {
-                        "asset_id": row["asset_id"],
-                        "frame_idx": pd.array(idx, dtype="int32"),
-                        "frame_ms": [i * period_ms for i in idx],
-                        "payload": [frames[i] for i in idx],
-                    }
-                )
-            pdf = pdf[~real]
-            if len(pdf) == 0:
-                continue
-            # plain MP4s and animated AVIF alike: same sample tables
-            mp4 = pdf["payload"].map(lambda p: has_movie_box(p))
-            for _, row in pdf[mp4].iterrows():
-                try:
-                    samples = mp4_extract_samples(
-                        row["payload"], every_ms, keyframes_only=True
-                    )
-                except ValueError:
-                    samples = []
-                if not samples:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "asset_id": row["asset_id"],
-                        "frame_idx": pd.array(
-                            [i for i, _, _ in samples], dtype="int32"
-                        ),
-                        "frame_ms": [p for _, p, _ in samples],
-                        "payload": [b for _, _, b in samples],
-                    }
-                )
-            pdf = pdf[~mp4]
-            if len(pdf) == 0:
-                continue
-            if decode_stub == "raise":
-                raise NotImplementedError("video codec not available: plug ffmpeg here")
-            # fake duration: 1 ms per byte, capped — deterministic. The
-            # explode is pure numpy (repeat + offset arange), no pandas
-            # row iteration; only the per-frame hash is per-item, where
-            # the real operator's ffmpeg seek+decode call would sit.
-            dur = np.minimum(
-                pdf["n_bytes"].fillna(0).astype("int64").to_numpy(), 10_000
-            )
-            counts = -(-np.maximum(dur, 1) // every_ms)
-            frame_idx = np.arange(counts.sum()) - np.repeat(
-                np.cumsum(counts) - counts, counts
-            )
-            payloads = np.repeat(
-                pdf["payload"].to_numpy(dtype=object), counts
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": np.repeat(
-                        pdf["asset_id"].to_numpy(dtype=object), counts
-                    ),
-                    "frame_idx": frame_idx.astype("int32"),
-                    "frame_ms": frame_idx * every_ms,
-                    "payload": [
-                        hashlib.sha256(
-                            (p or b"") + str(i).encode()
-                        ).digest()
-                        for p, i in zip(payloads, frame_idx)
-                    ],
-                }
-            )
-
-    return assets.select("asset_id", "n_bytes", "payload").mapInPandas(
-        run, FRAME_SCHEMA
-    )
-
-
-VIDEO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_ms", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),  # PPM (P6) pixels
-    ]
-)
-
-
-def extract_video_frames(
-    assets: DataFrame, every_ms: int = 1000,
-    decode_stub: Literal["fake", "raise"] = "fake",
-) -> DataFrame:
-    """Video keyframe sampling WITH pixel decode: one PPM frame out per
-    sampled keyframe.
-
-    Real paths, no external process:
-
-    - **Animated GIF**: full GIF89a composition (disposal methods,
-      transparency, per-frame rects) through the native :mod:`.gif`
-      decoder; sampling uses the stream's own frame delays.
-    - **Animated WebP**: ANMF composition (blend/no-blend, dispose-to-
-      background, frame offsets) through the native VP8L decoder
-      (:mod:`.vp8l`; lossy VP8 frames take the stub).
-    - **MJPEG-in-AVI**: the container's JPEG frames decode through the
-      native :mod:`.jpeg` decoder.
-    - **AV1/HEVC-in-MP4**: each keyframe-snapped sync sample
-      (:mod:`.isobmff` sample tables) is rewrapped as a single-item
-      AVIF/HEIC (``wrap_video_sample_as_still`` + the track's
-      ``av1C``/``hvcC`` record) and decoded through the libheif path
-      (:mod:`.heif`) — the same bitstream a video decoder would see
-      for that frame, with the track dims as the display crop.
-
-    Other codecs (H.264/VP9...), or a host without libheif, hit
-    the stub: 'fake' emits a deterministic 8x8 PPM from the payload
-    hash (plumbing-real, pixels fake); 'raise' marks the ffmpeg
-    boundary. Explosion happens executor-side; frames are bounded by
-    ``every_ms``, never by video length in one row.
-    """
-    from neo4j_to_clickhouse_spark.operators import heif
-    from neo4j_to_clickhouse_spark.operators.avi import is_avi, parse_avi_mjpeg
-    from neo4j_to_clickhouse_spark.operators.isobmff import (
-        has_movie_box,
-        mp4_extract_samples,
-        mp4_video_config,
-        wrap_video_sample_as_still,
-    )
-
-    def fake_frame(payload: bytes, i: int) -> bytes:
-        h = hashlib.sha256((payload or b"") + str(i).encode()).digest()
-        return encode_ppm(
-            np.frombuffer((h * 6)[: 8 * 8 * 3], np.uint8).reshape(8, 8, 3)
-        )
-
-    def sample_composed(asset_id, payload, decode_frames):
-        """Shared sampler for composed-canvas animations (WebP/APNG):
-        browser-minimum delays, floor-frame selection, PPM output."""
-        try:
-            delays, canvases = decode_frames(payload)
-        except ValueError:
-            if decode_stub == "raise":
-                raise NotImplementedError(
-                    "undecodable animation payload"
-                ) from None
-            return [(asset_id, 0, 0, 8, 8, fake_frame(payload, 0))]
-        times, t = [], 0
-        for d in delays:
-            times.append(t)
-            t += d if d > 10 else 100
-        out = []
-        for tick in range(0, t, every_ms):
-            i = max(j for j, ft in enumerate(times) if ft <= tick)
-            px = canvases[i][..., :3]  # composited; alpha dropped
-            out.append(
-                (asset_id, i, times[i], px.shape[1], px.shape[0],
-                 encode_ppm(px))
-            )
-        return out
-
-    def rows_for(asset_id, payload):
-        from neo4j_to_clickhouse_spark.operators.png import (
-            decode_apng_frames,
-            is_apng,
-        )
-        from neo4j_to_clickhouse_spark.operators.vp8l import (
-            decode_webp_frames,
-            is_animated_webp,
-        )
-
-        if is_animated_webp(payload):
-            return sample_composed(asset_id, payload, decode_webp_frames)
-        if is_apng(payload):
-            return sample_composed(asset_id, payload, decode_apng_frames)
-        if payload is not None and payload[:4] == b"GIF8":
-            from neo4j_to_clickhouse_spark.operators.gif import (
-                decode_gif_frames,
-            )
-
-            return sample_composed(asset_id, payload, decode_gif_frames)
-        if is_avi(payload):
-            try:
-                period_ms, frames = parse_avi_mjpeg(payload)
-            except ValueError:
-                frames = []
-            out = []
-            for t in range(0, period_ms * len(frames), every_ms):
-                i = min(t // period_ms, len(frames) - 1)
-                decoded = decode_image(frames[i])
-                if decoded is None:
-                    continue
-                px = decoded[1]
-                out.append(
-                    (asset_id, i, i * period_ms, px.shape[1], px.shape[0],
-                     encode_ppm(px))
-                )
-            if out or frames:
-                return out
-        elif has_movie_box(payload):
-            # plain MP4s AND animated AVIF (avis: still meta + a real
-            # AV1 track) — the sample tables are the same either way
-            cfg = mp4_video_config(payload)
-            if (
-                cfg is not None
-                and cfg["config_type"] in ("av1C", "hvcC")
-                and cfg["config"]
-                and heif.available()
-            ):
-                out = []
-                for i, pts, sample in mp4_extract_samples(
-                    payload, every_ms, keyframes_only=True
-                ):
-                    still = wrap_video_sample_as_still(
-                        sample, cfg["config_type"], cfg["config"],
-                        cfg["width"], cfg["height"],
-                    )
-                    try:
-                        px = heif.decode_heif(still)
-                    except ValueError:
-                        continue
-                    # HEVC pads coded frames to CTU multiples; the
-                    # track dims are the display crop
-                    if cfg["width"] and cfg["height"]:
-                        px = px[: cfg["height"], : cfg["width"]]
-                    out.append(
-                        (asset_id, i, pts, px.shape[1], px.shape[0],
-                         encode_ppm(px))
-                    )
-                return out
-        if decode_stub == "raise":
-            raise NotImplementedError(
-                "video pixel decode not available for this payload: "
-                "MJPEG-AVI and AV1-MP4(+libheif) decode natively; plug "
-                "ffmpeg here for other codecs"
-            )
-        return [(asset_id, 0, 0, 8, 8, fake_frame(payload, 0))]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "frame_idx", "frame_ms", "width", "height", "frame"]
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                out = rows_for(row["asset_id"], row["payload"])
-                if out:
-                    yield pd.DataFrame(out, columns=cols)
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, VIDEO_FRAME_SCHEMA
-    )

@@ -3,7 +3,7 @@
 PNG needs no external library at all: chunk framing, DEFLATE (stdlib
 zlib), and the five scanline filters. This module is the baseline codec
 behind :func:`.multimodal.decode_image`, same contract as the sibling
-:mod:`.jpeg` module — decode to HxWx3 uint8 RGB.
+:mod:`.gif` and :mod:`.vp8l` modules — decode to HxWx3 uint8 RGB.
 
 Supported: every legal (color type, bit depth) combination of the spec
 — gray 1/2/4/8/16, palette 1/2/4/8, RGB / gray+alpha / RGBA 8/16 —
@@ -135,9 +135,9 @@ def decode_png(payload: bytes) -> np.ndarray:
 
 def decode_png_rgba(payload: bytes) -> np.ndarray:
     """Decode PNG bytes to an HxWx4 uint8 RGBA array (gray/RGB expand
-    opaque; palette alpha comes from ``tRNS``). The APNG composer
-    below needs the alpha lane; :func:`decode_png` stays the RGB
-    surface the rest of the pipeline consumes."""
+    opaque; palette alpha comes from ``tRNS``). :func:`decode_png`
+    drops the alpha lane and stays the RGB surface the rest of the
+    pipeline consumes."""
     if len(payload) < 8 or payload[:8] != _SIG:
         raise ValueError("not a PNG payload (bad signature)")
     pos = 8
@@ -275,114 +275,6 @@ def apng_frame_delays(payload: bytes) -> list[int]:
             break
         pos += 12 + length
     return out
-
-
-def decode_apng_frames(
-    payload: bytes,
-) -> tuple[list[int], list[np.ndarray]]:
-    """Decode an APNG into composed RGBA canvases.
-
-    Returns ``(delays_ms, canvases)``. Composition per the spec: the
-    canvas (IHDR dims) starts fully transparent; each frame's region
-    either replaces (``blend_op`` 0, SOURCE) or alpha-composites
-    (``blend_op`` 1, OVER); after emitting, ``dispose_op`` applies —
-    0 none, 1 clear the region to transparent black, 2 restore the
-    pre-frame canvas (treated as 1 on the first frame, as required).
-    An ``IDAT`` preceded by an ``fcTL`` is the first frame; otherwise
-    the IDAT image is the non-animated fallback and only ``fdAT``
-    frames play. Each frame's data decodes as a standalone PNG
-    (same IHDR params at the frame dims, shared PLTE/tRNS)."""
-    if not is_apng(payload):
-        raise ValueError("not an APNG")
-    pos = 8
-    ihdr_body = None
-    aux = b""  # PLTE + tRNS pass through to every frame
-    frames: list[tuple[tuple, bytearray]] = []
-    seen_idat = False
-    idat_owner: bytearray | None = None
-    while pos + 8 <= len(payload):
-        length, ctype = struct.unpack_from(">I4s", payload, pos)
-        body = payload[pos + 8 : pos + 8 + length]
-        if len(body) != length:
-            raise ValueError("truncated PNG chunk")
-        if ctype == b"IHDR":
-            ihdr_body = body
-        elif ctype in (b"PLTE", b"tRNS"):
-            aux += _png_chunk(ctype, body)
-        elif ctype == b"fcTL":
-            if length < 26:
-                raise ValueError("short fcTL")
-            frames.append(
-                (struct.unpack(">IIIIIHHBB", body), bytearray())
-            )
-        elif ctype == b"IDAT":
-            # an fcTL before the first IDAT makes the IDAT frame 1;
-            # otherwise the IDAT image is only the non-animated
-            # fallback. IDAT chunks are contiguous, so the ownership
-            # decided at the first one holds for the rest.
-            if not seen_idat:
-                idat_owner = frames[0][1] if len(frames) == 1 else None
-                seen_idat = True
-            if idat_owner is not None:
-                idat_owner.extend(body)
-        elif ctype == b"fdAT":
-            if not frames:
-                raise ValueError("fdAT without a preceding fcTL")
-            if length < 4:
-                raise ValueError("short fdAT")
-            frames[-1][1].extend(body[4:])  # strip sequence_number
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if ihdr_body is None:
-        raise ValueError("missing IHDR")
-    cw, chh, depth, color, comp, filt, _interlace = struct.unpack(
-        ">IIBBBBB", ihdr_body
-    )
-    if not frames:
-        raise ValueError("APNG contains no frames")
-    canvas = np.zeros((chh, cw, 4), np.uint8)
-    delays: list[int] = []
-    out: list[np.ndarray] = []
-    for n, (fctl, data) in enumerate(frames):
-        _seq, fw, fh, fx, fy, dnum, dden, dispose, blend = fctl
-        if fx + fw > cw or fy + fh > chh or not data:
-            raise ValueError("fcTL region outside the canvas or empty")
-        sub = (
-            _SIG
-            + _png_chunk(
-                b"IHDR",
-                struct.pack(">IIBBBBB", fw, fh, depth, color, comp, filt, 0),
-            )
-            + aux
-            + _png_chunk(b"IDAT", bytes(data))
-            + _png_chunk(b"IEND", b"")
-        )
-        frame = decode_png_rgba(sub)
-        if n == 0 and dispose == 2:
-            dispose = 1  # spec: APNG_DISPOSE_OP_PREVIOUS on frame 0
-        saved = canvas.copy() if dispose == 2 else None
-        region = canvas[fy : fy + fh, fx : fx + fw]
-        if blend == 0:  # SOURCE
-            region[:] = frame
-        else:  # OVER
-            fa = frame[..., 3:4].astype(np.float64) / 255.0
-            ba = region[..., 3:4].astype(np.float64) / 255.0
-            oa = fa + ba * (1.0 - fa)
-            safe = np.where(oa == 0.0, 1.0, oa)
-            oc = (
-                frame[..., :3] * fa + region[..., :3] * ba * (1.0 - fa)
-            ) / safe
-            region[..., :3] = np.rint(oc).astype(np.uint8)
-            region[..., 3:4] = np.rint(oa * 255.0).astype(np.uint8)
-            region[(oa[..., 0] == 0.0)] = 0
-        out.append(canvas.copy())
-        delays.append(round(1000 * dnum / (dden or 100)))
-        if dispose == 1:
-            canvas[fy : fy + fh, fx : fx + fw] = 0
-        elif dispose == 2 and saved is not None:
-            canvas = saved
-    return delays, out
 
 
 def encode_apng(

@@ -2,7 +2,7 @@
 
 Closes the WebP half of the reference pipeline's opaque-media boundary
 (SURVEY.md §2; the reference stores media as opaque bytes and never
-decodes — WebP-lossless joins BMP/PPM/JPEG/PNG/GIF as a REAL
+decodes — WebP-lossless joins BMP/PPM/PNG/GIF as a REAL
 pure-stdlib decode path behind :func:`multimodal.decode_image`,
 leaving only formats that genuinely need external DSP codecs stubbed:
 lossy VP8, AVIF, H.264/VP9/AV1).

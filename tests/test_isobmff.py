@@ -5,8 +5,9 @@ hand-built box trees with exact closed-form ground truth, version/flags
 variants (v0/v1 FullBoxes, ipma essential-wide entries, co64, uniform
 stsz, 64-bit ``largesize``), a byte-by-byte truncation sweep that must
 never escape the documented error contract, malformed-input rejection,
-and the Spark wiring: ``probe_assets`` fills AVIF dims / MP4 duration
-and ``sample_frames`` emits the container's REAL codec-sample bytes.
+corrupted (not truncated) sample counts that must stay bounded by the
+payload, and the Spark wiring: ``probe_assets`` fills AVIF dims and
+MP4 / animated-AVIF durations.
 """
 
 from __future__ import annotations
@@ -23,10 +24,11 @@ from neo4j_to_clickhouse_spark.operators.isobmff import (
     find_box,
     fullbox,
     is_avif,
+    is_heif_still,
     is_isobmff,
     is_mp4,
     iter_boxes,
-    mp4_extract_samples,
+    movie_duration_ms,
     mp4_sample_index,
     probe_avif,
     probe_mp4,
@@ -256,134 +258,42 @@ def test_mp4_truncation_sweep():
                 assert prefix[off : off + size] == samples[i]
 
 
-# --- MP4 frame extraction -----------------------------------------------------
+def _patched(data, box_type, offset, value):
+    """``data`` with one u32 of box ``box_type`` set to ``value`` — a
+    corrupted count, the payload length unchanged. ``offset`` counts
+    from the box payload, so 4 is the first field after the FullBox
+    version/flags."""
+    out = bytearray(data)
+    struct.pack_into(">I", out, data.index(box_type) + 4 + offset, value)
+    return bytes(out)
 
 
-def test_mp4_extract_samples_nearest_and_keyframe_snap():
-    samples, deltas, data = _mp4_fixture()
-    # pts: 0,100,200,300,500,700,900,1050,1200 — keyframes at idx 0,3,6;
-    # ticks 0/400/800/1200 select the last sample with pts <= tick
-    got = mp4_extract_samples(data, every_ms=400)
-    assert [(i, p) for i, p, _ in got] == [
-        (0, 0),
-        (3, 300),
-        (5, 700),
-        (8, 1200),
-    ]
-    for i, _, payload in got:
-        assert payload == samples[i]
-    snapped = mp4_extract_samples(data, every_ms=400, keyframes_only=True)
-    assert [(i, p) for i, p, _ in snapped] == [
-        (0, 0),
-        (3, 300),
-        (3, 300),
-        (6, 900),
-    ]
-    for i, _, payload in snapped:
-        assert payload == samples[i]
+def test_mp4_sample_index_rejects_uniform_count_beyond_payload():
+    """A uniform stsz whose count x size exceeds the payload is
+    malformed: ValueError, not a silently short index."""
+    data = encode_mp4([b"\0" * 20] * 5, [40] * 5, keyframes=None)
+    assert len(mp4_sample_index(data)) == 5
+    with pytest.raises(ValueError):
+        mp4_sample_index(_patched(data, b"stsz", 8, 5_000_000))
 
 
-# --- iloc / item payload --------------------------------------------------------
+def test_mp4_sample_index_bounds_stts_run_by_sample_count():
+    """A corrupted stts run length expands only up to the stsz sample
+    count: the index is unchanged and memory stays small."""
+    import tracemalloc
 
-
-def _iloc_v0(items):
-    """items: {id: [(off, len)]} — offset_size 4, length_size 4."""
-    body = bytes([0x44, 0x00]) + struct.pack(">H", len(items))
-    for item_id, extents in sorted(items.items()):
-        body += struct.pack(">HHH", item_id, 0, len(extents))
-        for off, ln in extents:
-            body += struct.pack(">II", off, ln)
-    return fullbox(b"iloc", 0, 0, body)
-
-
-def test_item_payload_file_offsets_and_extents():
-    mdat_payload = b"AAAABBBBBCCCC"
-    iloc_ph = _iloc_v0({1: [(0, 4), (9, 4)], 2: [(4, 5)]})
-    meta = fullbox(b"meta", 0, 0, iloc_ph)
-    base = len(meta) + 8
-    meta = fullbox(
-        b"meta",
-        0,
-        0,
-        _iloc_v0({1: [(base, 4), (base + 9, 4)], 2: [(base + 4, 5)]}),
-    )
-    data = meta + box(b"mdat", mdat_payload)
-    from neo4j_to_clickhouse_spark.operators.isobmff import item_payload
-
-    assert item_payload(data, 1) == b"AAAACCCC"  # extents concatenate
-    assert item_payload(data, 2) == b"BBBBB"
-    assert item_payload(data, 9) is None
-    # out-of-bounds extent -> None, not a slice of garbage
-    bad = fullbox(b"meta", 0, 0, _iloc_v0({1: [(10_000, 4)]}))
-    assert item_payload(bad + box(b"mdat", b"x"), 1) is None
-
-
-def test_item_payload_idat_construction_method():
-    # v1 iloc, construction_method 1: offsets into the idat payload
-    body = bytes([0x44, 0x00]) + struct.pack(">H", 1)
-    body += struct.pack(">HHHH", 1, 1, 0, 1)  # id, method 1, dref, 1 ext
-    body += struct.pack(">II", 3, 5)
-    meta = fullbox(
-        b"meta", 0, 0, fullbox(b"iloc", 1, 0, body) + box(b"idat", b"xyzHELLOqq")
-    )
-    from neo4j_to_clickhouse_spark.operators.isobmff import item_payload
-
-    assert item_payload(meta, 1) == b"HELLO"
-
-
-def test_wrap_av1_item_as_avif_shape():
-    """The rewrap must be a well-formed single-item AVIF whose iloc
-    points exactly at the sample bytes (self-validated by our own
-    parser; the libheif decode equivalence lives in test_heif.py)."""
-    from neo4j_to_clickhouse_spark.operators.isobmff import (
-        item_payload,
-        primary_item_id,
-        wrap_av1_item_as_avif,
-    )
-
-    sample = bytes(range(64))
-    avif = wrap_av1_item_as_avif(sample, b"\x81\x00\x0c\x00", 320, 180)
-    assert is_avif(avif)
-    info = probe_avif(avif)
-    assert (info["width"], info["height"]) == (320, 180)
-    assert info["codec"] == "av01"
-    pid = primary_item_id(avif)
-    assert pid == 1
-    assert item_payload(avif, pid) == sample
-
-
-def test_mp4_video_config_roundtrip():
-    from neo4j_to_clickhouse_spark.operators.isobmff import mp4_video_config
-
-    av1c = b"\x81\x00\x0c\x00"
-    seb = (
-        b"\x00" * 6
-        + struct.pack(">H", 1)
-        + b"\x00" * 16
-        + struct.pack(">HH", 96, 64)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + b"\x00" * 4
-        + struct.pack(">H", 1)
-        + b"\x00" * 32
-        + struct.pack(">Hh", 0x0018, -1)
-        + box(b"av1C", av1c)
-    )
-    data = encode_mp4(
-        [b"S" * 10], [100], keyframes=[1], codec=b"av01",
-        sample_entry_body=seb, width=96, height=64,
-    )
-    cfg = mp4_video_config(data)
-    assert cfg == {
-        "codec": "av01",
-        "width": 96,
-        "height": 64,
-        "config_type": "av1C",
-        "config": av1c,
-    }
-    # the opaque default entry yields no config but never crashes
-    _, _, plain = _mp4_fixture()
-    cfg2 = mp4_video_config(plain)
-    assert cfg2 is not None and cfg2["config"] is None
+    data = encode_mp4([b"\0" * 20] * 5, [40] * 5, keyframes=None)
+    expected = mp4_sample_index(data)
+    # stts body: entry_count, then (sample_count, delta) runs
+    bad = _patched(data, b"stts", 8, 5_000_000)
+    tracemalloc.start()
+    try:
+        got = mp4_sample_index(bad)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert got == expected
+    assert peak < 5_000_000
 
 
 # --- Spark wiring (multimodal consumers) ---------------------------------------
@@ -392,8 +302,20 @@ def test_mp4_video_config_roundtrip():
 def test_probe_assets_fills_avif_and_mp4_metadata(spark):
     avif = encode_avif(640, 360, depth=10, alpha=True)
     _, deltas, mp4 = _mp4_fixture()
+    # animated AVIF: a HEIF brand over an AV1 track — a HEIF still to
+    # the classifier, its duration from the movie header
+    avis = encode_mp4(
+        [b"\x01" * 12] * 3, [250] * 3, keyframes=[1, 2, 3],
+        major_brand=b"avis",
+    )
+    assert is_heif_still(avis) and not is_mp4(avis)
+    assert movie_duration_ms(avis) == 750
     df = spark.createDataFrame(
-        [("img-avif", bytearray(avif)), ("vid-mp4", bytearray(mp4))],
+        [
+            ("img-avif", bytearray(avif)),
+            ("vid-mp4", bytearray(mp4)),
+            ("anim-avif", bytearray(avis)),
+        ],
         "asset_id string, payload binary",
     )
     assets = M.ingest_binary_assets(df, "asset_id", "payload", "image")
@@ -402,21 +324,4 @@ def test_probe_assets_fills_avif_and_mp4_metadata(spark):
     assert rows["img-avif"].duration_ms is None
     assert rows["vid-mp4"].duration_ms == sum(deltas)
     assert (rows["vid-mp4"].width, rows["vid-mp4"].height) == (320, 180)
-
-
-def test_sample_frames_emits_real_mp4_codec_samples(spark):
-    samples, _, mp4 = _mp4_fixture()
-    df = spark.createDataFrame(
-        [("vid", bytearray(mp4))], "asset_id string, payload binary"
-    )
-    assets = M.ingest_binary_assets(df, "asset_id", "payload", "video")
-    rows = M.sample_frames(assets, every_ms=400, decode_stub="raise").collect()
-    # keyframe-snapped: the emitted payloads ARE the planted codec samples
-    assert [(r.frame_idx, r.frame_ms) for r in rows] == [
-        (0, 0),
-        (3, 300),
-        (3, 300),
-        (6, 900),
-    ]
-    for r in rows:
-        assert bytes(r.payload) == samples[r.frame_idx]
+    assert rows["anim-avif"].duration_ms == 750

@@ -2,7 +2,8 @@
 
 ``shingle_sets`` is the building block under every shingle consumer; a
 restructure of it (or of the exact-Jaccard / LSH-verify shapes built on
-it) may change how rows are produced, never which rows come out. The
+it, or of the positional span digests behind span-level dedup) may
+change how rows are produced, never which rows come out. The
 digests below are sha256 over the sorted outputs on a seeded documents
 table built by ``tools/gen_sf_fixture.py``'s document generator (200
 documents, ~4.5% planted near-duplicates, ~0.2% exact duplicates).
@@ -23,6 +24,7 @@ from neo4j_to_clickhouse_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_dedup,
     shingle_sets,
+    span_digest_rows,
 )
 
 sys.path.insert(
@@ -44,6 +46,10 @@ EXPECTED = {
     ),
     "minhash_lsh_dedup": (
         7, "a3215576279be1755571028ab920e3c0bc55a4be85e7d7540475b8b4ac62925f"
+    ),
+    "span_digest_rows": (
+        10111,
+        "afc08491ba340cb9fd83fdbb5f47d03e4c49204f658a116e923a288aaa03fd48",
     ),
 }
 
@@ -98,3 +104,14 @@ def test_minhash_lsh_dedup_rows_pinned(documents):
         ).collect()
     ]
     assert _digest(rows) == EXPECTED["minhash_lsh_dedup"]
+
+
+def test_span_digest_rows_pinned(documents):
+    # (doc_id, start, md5 of the 8-token span) for every position
+    rows = [
+        tuple(r)
+        for r in span_digest_rows(
+            documents, "doc_id", "text", 8, with_start=True
+        ).collect()
+    ]
+    assert _digest(rows) == EXPECTED["span_digest_rows"]

@@ -278,23 +278,6 @@ def test_decode_image_sniffs_webp():
     assert decode_image(lossy) is None
 
 
-def test_resize_reencodes_webp(spark):
-    from neo4j_to_clickhouse_spark.operators.multimodal import resize_images
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (8, 6, 3), dtype=np.uint8)
-    assets = spark.createDataFrame(
-        [("a1", encode_webp(img))], "asset_id string, payload binary"
-    )
-    row = resize_images(assets, 4, 3).collect()[0]
-    assert (row.width, row.height) == (4, 3)
-    resized = decode_webp(bytes(row.payload))
-    assert resized.shape == (3, 4, 3)
-    # nearest-neighbor: every output pixel exists in the source
-    src = {tuple(p) for p in img.reshape(-1, 3).tolist()}
-    assert all(tuple(p) in src for p in resized.reshape(-1, 3).tolist())
-
-
 # --- animation (ANIM/ANMF) -----------------------------------------------------
 
 
@@ -390,34 +373,6 @@ def test_webp_animation_rejects_malformed():
             [{"pixels": np.zeros((2, 2, 3), np.uint8), "x": 1}],
             canvas=(4, 4),
         )
-
-
-def test_webp_animation_extract_video_frames(spark):
-    from neo4j_to_clickhouse_spark.operators.multimodal import (
-        decode_image,
-        extract_video_frames,
-    )
-    from neo4j_to_clickhouse_spark.operators.vp8l import (
-        encode_webp_animation,
-    )
-
-    frames = [
-        {"pixels": np.full((5, 7, 3), (30 * i, 5, 1), np.uint8),
-         "duration_ms": 300}
-        for i in range(1, 4)
-    ]
-    data = encode_webp_animation(frames, canvas=(7, 5))
-    df = spark.createDataFrame(
-        [("w", bytearray(data))], "asset_id string, payload binary"
-    )
-    rows = extract_video_frames(df, every_ms=300, decode_stub="raise").collect()
-    assert [(r.frame_idx, r.frame_ms) for r in rows] == [
-        (0, 0), (1, 300), (2, 600),
-    ]
-    for i, r in enumerate(rows, start=1):
-        fmt, px = decode_image(bytes(r.frame))
-        assert fmt == "ppm"
-        assert np.array_equal(px, np.full((5, 7, 3), (30 * i, 5, 1), np.uint8))
 
 
 def test_webp_animation_probe_assets_duration(spark):
