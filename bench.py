@@ -603,6 +603,110 @@ def _pin_caches(spark, sf_dir: str, cpus: str) -> None:
     ).count()
 
 
+_STEAL_DIRTY_CS = 50  # 0.5 stolen CPU-seconds during one run
+_RATIO_DIRTY = 1.6  # wall/task-CPU ratio vs the query's best run
+_MAX_RUNS = 4
+
+
+def _steal_cs() -> int:
+    try:
+        with open("/proc/stat") as f:
+            return int(f.readline().split()[8])
+    except (OSError, IndexError, ValueError):
+        return 0
+
+
+# Per-run TASK-CPU seconds from Spark's own task metrics (VERDICT
+# r09 item 2): cumulative executorCpuTime across completed stages,
+# read from the AppStatusStore (present with the UI disabled),
+# diffed around each run. The r09 bench recorded 2-5x wall
+# regressions on runs its /proc-steal guard certified clean —
+# /proc/stat steal misses co-tenant memory-bandwidth / frequency
+# contention. Wall and task-CPU disambiguate: a noisy host inflates
+# wall while the plan burns the same CPU (wall/CPU ratio is the
+# outlier); a real plan regression inflates BOTH. A run whose
+# wall/CPU ratio exceeds _RATIO_DIRTY x the query's best observed
+# ratio is dirty regardless of steal. (Stage eviction caveat: the
+# store retains spark.ui.retainedStages=1000 stages; a full bench
+# completes ~400, so the cumulative sum never goes backwards here.)
+def _task_cpu_s(s) -> float:
+    jsc = s.sparkContext
+    store = jsc._jsc.sc().statusStore()
+    jvm, gw = jsc._jvm, jsc._gateway
+    total_ns = 0
+    it = store.stageList(
+        jvm.java.util.ArrayList(),
+        False,
+        False,
+        gw.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    ).iterator()
+    while it.hasNext():
+        total_ns += it.next().executorCpuTime()
+    return total_ns / 1e9
+
+
+def _codegen_compiles(spark) -> int | None:
+    return _codegen_snapshot(spark).get("codegen_compile_count")
+
+
+def _measure(spark, prepare, run_once):
+    """Up to _MAX_RUNS timed runs of one job on the CURRENT session;
+    returns (runs, cpus, compiles, steals, clean flags, rowcount).
+    ``compiles`` is each run's count of generated classes compiled (a
+    row whose classes fell out of the codegen cache recompiles them on
+    every run), read outside the timed region."""
+    runs: list[float] = []
+    steals: list[int] = []
+    run_cpus: list[float] = []
+    compiles: list[int | None] = []
+
+    def _clean_flags() -> list[bool]:
+        return clean_run_flags(
+            runs, run_cpus, steals, _STEAL_DIRTY_CS, _RATIO_DIRTY
+        )
+
+    n = 0
+    while len(runs) < _MAX_RUNS and (
+        len(runs) < 2 or sum(_clean_flags()) < 2
+    ):
+        # every timed run starts cache-cold (VERDICT r15 item 1): a
+        # query's intra-plan persists (shingle/signature tables,
+        # shared term counts) must populate INSIDE the timed region,
+        # and run 2 of a min-of-N row must not inherit run 1's
+        # caches. JIT/codegen warmth legitimately carries over (a
+        # long-lived cluster has it); materialized data does not.
+        spark.catalog.clearCache()
+        prepare(spark)
+        k0 = _codegen_compiles(spark)
+        s0 = _steal_cs()
+        c0 = _task_cpu_s(spark)
+        t0 = time.perf_counter()
+        n = run_once(spark)
+        runs.append(round(time.perf_counter() - t0, 3))
+        run_cpus.append(round(_task_cpu_s(spark) - c0, 3))
+        steals.append(_steal_cs() - s0)
+        k1 = _codegen_compiles(spark)
+        compiles.append(None if k0 is None or k1 is None else k1 - k0)
+    return runs, run_cpus, compiles, steals, _clean_flags(), n
+
+
+def _payload(contract: dict, runs: dict, cpu_s: dict, compiles: dict,
+             steal_cs: dict, cpu_retries: dict, codegen_final: dict) -> str:
+    """The archived evidence: the contract plus per-run diagnostics."""
+    return json.dumps(
+        {
+            **contract,
+            "runs": runs,
+            "run_cpu_s": cpu_s,
+            "run_codegen_compiles": compiles,
+            "run_steal_cs": steal_cs,
+            "cpu_retries": cpu_retries,
+            "codegen_final": codegen_final,
+        }
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = _cpus()
@@ -633,46 +737,7 @@ def main() -> None:
     all_runs: dict[str, list[float]] = {}
     all_steals: dict[str, list[int]] = {}
     all_cpu: dict[str, list[float]] = {}
-    _STEAL_DIRTY_CS = 50  # 0.5 stolen CPU-seconds during one run
-    _RATIO_DIRTY = 1.6  # wall/task-CPU ratio vs the query's best run
-    _MAX_RUNS = 4
-
-    def _steal_cs() -> int:
-        try:
-            with open("/proc/stat") as f:
-                return int(f.readline().split()[8])
-        except (OSError, IndexError, ValueError):
-            return 0
-
-    # Per-run TASK-CPU seconds from Spark's own task metrics (VERDICT
-    # r09 item 2): cumulative executorCpuTime across completed stages,
-    # read from the AppStatusStore (present with the UI disabled),
-    # diffed around each run. The r09 bench recorded 2-5x wall
-    # regressions on runs its /proc-steal guard certified clean —
-    # /proc/stat steal misses co-tenant memory-bandwidth / frequency
-    # contention. Wall and task-CPU disambiguate: a noisy host inflates
-    # wall while the plan burns the same CPU (wall/CPU ratio is the
-    # outlier); a real plan regression inflates BOTH. A run whose
-    # wall/CPU ratio exceeds _RATIO_DIRTY x the query's best observed
-    # ratio is dirty regardless of steal. (Stage eviction caveat: the
-    # store retains spark.ui.retainedStages=1000 stages; a full bench
-    # completes ~400, so the cumulative sum never goes backwards here.)
-    def _task_cpu_s(s) -> float:
-        jsc = s.sparkContext
-        store = jsc._jsc.sc().statusStore()
-        jvm, gw = jsc._jvm, jsc._gateway
-        total_ns = 0
-        it = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        ).iterator()
-        while it.hasNext():
-            total_ns += it.next().executorCpuTime()
-        return total_ns / 1e9
-
+    all_compiles: dict[str, list[int | None]] = {}
     # every timed run CONSUMES the full result with .collect() — the
     # same consumption as the correctness driver and a real client.
     # Rounds 1-7 timed `.count()`, under which Catalyst legitimately
@@ -708,41 +773,10 @@ def main() -> None:
     cpu_dirty: list[str] = []
     cpu_retries: dict[str, dict] = {}
 
-    def _measure(name, prepare, run_once):
-        """Up to _MAX_RUNS timed runs of one job on the CURRENT
-        session; returns (runs, cpus, steals, rowcount)."""
-        runs: list[float] = []
-        steals: list[int] = []
-        run_cpus: list[float] = []
-
-        def _clean_flags() -> list[bool]:
-            return clean_run_flags(
-                runs, run_cpus, steals, _STEAL_DIRTY_CS, _RATIO_DIRTY
-            )
-
-        n = 0
-        while len(runs) < _MAX_RUNS and (
-            len(runs) < 2 or sum(_clean_flags()) < 2
-        ):
-            # every timed run starts cache-cold (VERDICT r15 item 1): a
-            # query's intra-plan persists (shingle/signature tables,
-            # shared term counts) must populate INSIDE the timed region,
-            # and run 2 of a min-of-N row must not inherit run 1's
-            # caches. JIT/codegen warmth legitimately carries over (a
-            # long-lived cluster has it); materialized data does not.
-            spark.catalog.clearCache()
-            prepare(spark)
-            s0 = _steal_cs()
-            c0 = _task_cpu_s(spark)
-            t0 = time.perf_counter()
-            n = run_once(spark)
-            runs.append(round(time.perf_counter() - t0, 3))
-            run_cpus.append(round(_task_cpu_s(spark) - c0, 3))
-            steals.append(_steal_cs() - s0)
-        return runs, run_cpus, steals, _clean_flags(), n
-
     for name, prepare, run_once in jobs:
-        runs, run_cpus, steals, flags, n = _measure(name, prepare, run_once)
+        runs, run_cpus, compiles, steals, flags, n = _measure(
+            spark, prepare, run_once
+        )
 
         # CPU-inflation guard (VERDICT r13 item 1): wall and task-CPU
         # rising TOGETHER with quiet steal passes both older guards,
@@ -770,13 +804,15 @@ def main() -> None:
                 shuffle_partitions=int(cpus),
             )
             _pin_caches(spark, sf_dir, cpus)
-            r2, c2, s2, f2, n = _measure(name, prepare, run_once)
+            r2, c2, k2, s2, f2, n = _measure(spark, prepare, run_once)
             cpu_retries[name] = {
-                "stale_session": {"wall": runs, "cpu_s": run_cpus},
-                "fresh_session": {"wall": r2, "cpu_s": c2},
+                "stale_session": {
+                    "wall": runs, "cpu_s": run_cpus, "compiles": compiles,
+                },
+                "fresh_session": {"wall": r2, "cpu_s": c2, "compiles": k2},
                 "codegen_at_flag": jit_before,
             }
-            runs, run_cpus, steals, flags = r2, c2, s2, f2
+            runs, run_cpus, compiles, steals, flags = r2, c2, k2, s2, f2
             clean_cpus = [
                 c for c, ok in zip(run_cpus, flags) if ok
             ] or run_cpus
@@ -799,9 +835,10 @@ def main() -> None:
         all_runs[name] = runs
         all_steals[name] = steals
         all_cpu[name] = run_cpus
+        all_compiles[name] = compiles
         print(
             f"# {name}: wall={runs} cpu_s={run_cpus} steal_cs={steals}"
-            f" ({n} rows)",
+            f" compiles={compiles} ({n} rows)",
             file=sys.stderr,
         )
     noise_after = _host_noise()
@@ -822,15 +859,9 @@ def main() -> None:
             "quiet_wait_sec": waited,
         },
     }
-    payload = json.dumps(
-        {
-            **contract,
-            "runs": all_runs,
-            "run_cpu_s": all_cpu,
-            "run_steal_cs": all_steals,
-            "cpu_retries": cpu_retries,
-            "codegen_final": jit_final,
-        }
+    payload = _payload(
+        contract, all_runs, all_cpu, all_compiles, all_steals, cpu_retries,
+        jit_final,
     )
     # full-JSON self-archive FIRST: the driver's stdout snapshot is
     # tail-truncated (~2,000 chars — it lost 13/20 wall times in r10 and

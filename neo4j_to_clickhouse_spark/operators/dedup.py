@@ -925,7 +925,10 @@ def minhash_lsh_dedup(
             "jaccard",
             F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        # n_inter > 0: at threshold 0 a disjoint candidate pair (a band
+        # collision without a shared shingle) is not a pair, as it never
+        # is in jaccard_pairs, whose join meets only on a shared shingle
+        .filter((F.col("jaccard") >= threshold) & (F.col("n_inter") > 0))
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -1113,7 +1116,9 @@ def minhash_incremental(
             F.col("n_inter")
             / (F.col("n_a") + F.size("__dg_b") - F.col("n_inter")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        # n_inter > 0: at threshold 0 a store document sharing no
+        # shingle with the new one does not make it a duplicate
+        .filter((F.col("jaccard") >= threshold) & (F.col("n_inter") > 0))
         .select(F.col("new_id").alias(id_col))
         .distinct()
     )

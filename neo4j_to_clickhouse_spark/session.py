@@ -9,6 +9,11 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 - Arrow enabled for the few pandas-UDF operators (similarity / multimodal).
 - Shuffle partition count is a *default*; jobs that know their output
   cardinality repartition explicitly.
+- The generated-code class cache holds the engine's whole working set of
+  compiled classes, so a long-lived session compiles each plan shape once
+  (census and reading guide in docs/SCALING.md, "Generated-code reuse").
+- The driver heap defaults to a quarter of the host's physical memory
+  (``SPARK_GRAFT_DRIVER_MEM`` overrides it).
 """
 
 from __future__ import annotations
@@ -18,6 +23,35 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def driver_mem(meminfo: str | None = None) -> str:
+    """The ``spark.driver.memory`` default: ``SPARK_GRAFT_DRIVER_MEM`` when
+    set, else a quarter of physical memory (``MemTotal`` of
+    ``/proc/meminfo``, or of ``meminfo`` when given) in MiB, floored at
+    1 GiB; 2g when the total cannot be read.
+
+    In local mode the driver heap is the whole cluster's memory, so it
+    scales with the host: a fixed 48g overcommitted a 15 GiB host until
+    the kernel killed the JVM mid-suite, and a quarter of the 128 GiB
+    bench host is 32 GiB, four times the 8g on which a 32-thread
+    session GC-thrashed late in a bench run.
+    """
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        if meminfo is None:
+            with open("/proc/meminfo") as fh:
+                meminfo = fh.read()
+        total_kb = next(
+            int(line.split()[1])
+            for line in meminfo.splitlines()
+            if line.startswith("MemTotal:")
+        )
+    except (OSError, ValueError, IndexError, StopIteration):
+        return "2g"
+    return f"{max(1024, total_kb // 4 // 1024)}m"
 
 
 def cluster_conf(
@@ -172,12 +206,21 @@ def get_spark(
         # this, reading the partitioned table back infers it as int.
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # Spark keeps compiled generated classes in an LRU of 100 by
+        # default; the engine's working sets are larger (distinct classes
+        # measured per session: ~200 for a perfbench registry_mix run,
+        # ~175 for graph_queries_under_ingest with its streams, ~700 for
+        # bench.py's rows at sf0.001, ~3,200 for all 210 registry
+        # queries). At 100 the cache thrashed: registry_mix's warm pass
+        # recompiled 190 of its ~200 classes, and each reloaded class ran
+        # interpreted again until HotSpot re-JIT-ed it. 4096 holds the
+        # largest census with headroom (docs/SCALING.md, "Generated-code
+        # reuse"). Static conf: it only takes effect at session build.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # local mode: the driver heap IS the whole cluster's memory (all
-        # executor threads' shuffle + cache + agg state). 8g starved a
-        # 32-thread session into GC thrash after allocation-heavy query
-        # sequences (identical queries 2s standalone, 25-50s late in a
-        # bench run); the box has 128 GiB.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # executor threads' shuffle + cache + agg state); sized from the
+        # host (driver_mem)
+        .config("spark.driver.memory", driver_mem())
     )
     if master:
         builder = builder.master(master)

@@ -4,8 +4,11 @@ and the self-archive path is derivable so a bench run always leaves a
 complete JSON in docs/evidence regardless of driver stdout truncation.
 """
 
+import json
 import os
 import sys
+
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -69,6 +72,34 @@ def test_archive_failure_sends_payload_to_stderr(tmp_path, capsys):
     assert out.out == ""
     assert "evidence archive failed" in out.err
     assert out.err.rstrip().endswith('{"runs": [1]}')
+
+
+def test_measure_archives_per_run_compile_counts(spark):
+    """Each timed run's count of compiled generated classes is archived
+    beside its task CPU: a plan new to the session compiles on its first
+    run, and its later runs reuse the cached classes."""
+
+    def run_once(s):
+        # a literal no other test inlines: the first run must compile
+        return len(
+            s.range(0, 4, 1, 1)
+            .select((F.col("id") * 7907 + 8_200_000).alias("x"))
+            .collect()
+        )
+
+    runs, cpus, compiles, steals, _, n = bench._measure(
+        spark, lambda s: None, run_once
+    )
+    assert n == 4
+    assert len(compiles) == len(runs) == len(cpus) >= 2
+    assert compiles[0] >= 1
+    assert compiles[1:] == [0] * (len(runs) - 1)
+    payload = json.loads(bench._payload(
+        {"metric": "headline_queries_total_wall"}, {"job": runs},
+        {"job": cpus}, {"job": compiles}, {"job": steals}, {}, {},
+    ))
+    assert payload["run_codegen_compiles"] == {"job": compiles}
+    assert payload["run_cpu_s"] == {"job": cpus}
 
 
 def test_bm25_index_jobs_shape(spark):

@@ -477,6 +477,33 @@ def test_minhash_incremental_duplicate_store_rows_do_not_deflate_jaccard(spark):
     assert surv.count() == 0
 
 
+def test_minhash_incremental_threshold_zero_needs_a_shared_shingle(spark):
+    """At threshold 0 a store document that collides on a band but
+    shares no shingle does not make the new document a duplicate. The
+    collision is forced by pairing the new text's bucket rows with a
+    disjoint text's digest rows under one store id."""
+    from neo4j_to_clickhouse_spark.operators.dedup import (
+        lsh_store_buckets,
+        lsh_store_digests,
+        minhash_incremental,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog near the river"
+    other = "completely different historical content sits here ok"
+    new = spark.createDataFrame([(10, text)], "doc_id long, text string")
+    colliding = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    disjoint = spark.createDataFrame([(1, other)], "doc_id long, text string")
+    buckets, digests = lsh_store_buckets(colliding), lsh_store_digests(disjoint)
+    surv = minhash_incremental(new, buckets, digests, threshold=0.0)
+    assert [r["doc_id"] for r in surv.collect()] == [10]
+    # one shared shingle is enough at threshold 0
+    shared = lsh_store_digests(colliding).limit(1)
+    surv = minhash_incremental(
+        new, buckets, digests.unionAll(shared), threshold=0.0
+    )
+    assert surv.count() == 0
+
+
 def test_minhash_incremental_store_roundtrip(spark, tmp_path):
     # the store persists as plain parquet and the loop closes by
     # appending survivors' own rows

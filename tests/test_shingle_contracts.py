@@ -106,6 +106,29 @@ def test_minhash_lsh_dedup_rows_pinned(documents):
     assert _digest(rows) == EXPECTED["minhash_lsh_dedup"]
 
 
+def test_threshold_zero_lsh_pairs_are_exact_pairs(documents):
+    """At threshold 0 the LSH verify keeps only pairs that share a
+    shingle: each verified pair is an exact :func:`jaccard_pairs` pair
+    with the same Jaccard, and none has Jaccard 0 (a band collision
+    alone never makes a pair)."""
+
+    def pairs(df):
+        return {
+            (r["id_a"], r["id_b"]): r["j"]
+            for r in df.select(
+                "id_a", "id_b", F.round("jaccard", 6).alias("j")
+            ).collect()
+        }
+
+    lsh = pairs(minhash_lsh_dedup(documents, "doc_id", "text", n=3,
+                                  threshold=0.0))
+    exact = pairs(jaccard_pairs(documents, "doc_id", "text", n=3,
+                                threshold=0.0))
+    assert lsh, "the seeded corpus has planted near-duplicates"
+    assert min(lsh.values()) > 0
+    assert lsh.items() <= exact.items()
+
+
 def test_span_digest_rows_pinned(documents):
     # (doc_id, start, md5 of the 8-token span) for every position
     rows = [
