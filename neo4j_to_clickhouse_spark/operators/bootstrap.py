@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from neo4j_to_clickhouse_spark.operators.latest_state import duplicate_entities
+from neo4j_to_clickhouse_spark.operators.txn_store import read_table
 from neo4j_to_clickhouse_spark.sources.snapshot import (
     load_node_snapshot,
     load_relationship_snapshot,
@@ -45,8 +46,8 @@ def initial_load(
     if not validate:
         return {}
 
-    nodes_out = spark.read.parquet(nodes_table)
-    rels_out = spark.read.parquet(rels_table)
+    nodes_out = read_table(spark, nodes_table)
+    rels_out = read_table(spark, rels_table)
     label_dist = (
         nodes_out.select(F.explode("labels").alias("label"))
         .groupBy("label")

@@ -140,9 +140,8 @@ class ClassifierModel:
     trained with ``hasher='md5', seed=3, bigrams=False`` scored through
     any other (hasher, seed, bigrams, n_buckets) produce silently
     meaningless numbers. Passing the model (instead of a bare weight
-    list) to :func:`score_documents` or the streaming ingest
-    (``streaming/corpus.py``) makes the bucket space travel WITH the
-    weights, so the train→score boundary cannot drift.
+    list) to :func:`score_documents` makes the bucket space travel WITH
+    the weights, so the train→score boundary cannot drift.
     """
 
     weights: tuple[int, ...]
@@ -735,10 +734,8 @@ def _top_fraction_threshold(
     where the descending cumulative count first reaches
     ``k = ceil(fraction * n)`` — returned as ``(__t, __r)`` (threshold
     score, residue = how many ties AT ``__t`` belong in the top-k).
-    The exact batch ranker (:func:`select_top_fraction`), the online
-    calibrator (:func:`calibrate_threshold`), and the streaming
-    recalibrator (via :func:`calibrate_threshold_from_histogram`) are
-    all this plan."""
+    The exact batch ranker (:func:`select_top_fraction`) and the online
+    calibrator (:func:`calibrate_threshold`) are both this plan."""
     hist = df.groupBy(sel_col).agg(F.count("*").alias("__hn"))
     return _top_fraction_threshold_from_hist(
         hist, sel_col, "__hn", fraction
@@ -756,8 +753,7 @@ def calibrate_threshold(
     item 6): :func:`select_top_fraction` is batch-global (it must rank
     the boundary ties), so a STREAM cannot gate documents with it. The
     production pattern is: calibrate the threshold on a batch sample
-    once, then pass the literal to the ingest stream
-    (``start_corpus_stream(score_threshold=...)``), which keeps
+    once, then filter the stream with the literal, which keeps
     ``score >= t`` inside the scan — zero state, zero shuffle, and the
     threshold is a plan literal exactly like the weight vector.
 
@@ -784,35 +780,6 @@ def calibrate_threshold(
     )
     if not rows:
         return None  # empty input
-    return rows[0]["__t"]
-
-
-def calibrate_threshold_from_histogram(
-    hist: DataFrame,
-    fraction: float,
-    score_col: str = "score",
-    n_col: str = "n",
-) -> float | None:
-    """:func:`calibrate_threshold` over a PRE-AGGREGATED
-    ``(score, count)`` histogram — the streaming recalibrator's entry
-    point (VERDICT r14 item 4): the ingest stream persists one bounded
-    histogram per micro-batch, and every recalibration tick merges the
-    trailing window's rows and reads the threshold off them, never
-    re-touching document text. ``hist`` MAY hold duplicate score rows
-    (one per batch) — they are summed here. Returns ``None`` on an
-    empty histogram (gate with keep-everything)."""
-    if not 0.0 < fraction <= 1.0:
-        raise ValueError(f"fraction must be in (0, 1], got {fraction}")
-    merged = hist.groupBy(score_col).agg(F.sum(n_col).alias("__mn"))
-    rows = (
-        _top_fraction_threshold_from_hist(
-            merged, score_col, "__mn", fraction
-        )
-        .select("__t")
-        .collect()
-    )
-    if not rows:
-        return None
     return rows[0]["__t"]
 
 

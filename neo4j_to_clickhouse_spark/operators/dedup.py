@@ -1007,7 +1007,7 @@ def _bind_store_half(store: DataFrame, key: str) -> DataFrame:
             raise ValueError(
                 f"store half has unexpected columns {extra}: expected "
                 f"exactly ('id', {key!r}) — drop the replay/batch stamp "
-                "before probing (see start_corpus_neardup_stream._prior)"
+                "before probing"
             )
         return store.select(
             F.col("id").alias("old_id"), F.col(key).alias(key)

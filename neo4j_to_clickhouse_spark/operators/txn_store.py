@@ -1,18 +1,18 @@
-"""Transaction-logged Parquet partition store: snapshot isolation, time
-travel, and optimistic concurrency WITHOUT external table-format jars.
+"""Transaction-logged Parquet tables: the engine's one table-commit
+protocol. Every writer commits through it — batch loads
+(``sources.snapshot.write_events``), the streaming sinks (events,
+quarantine, the latest-state changelog) and the maintenance jobs
+(``operators.maintenance``) — and readers resolve a snapshot with
+:func:`read_table`.
 
-:class:`~neo4j_to_clickhouse_spark.operators.maintenance.LocalPartitionStore`
-documents its own gap honestly: the per-month rename swap leaves a brief
-reader-visible window where a month is absent, and readers that started
-before a swap can see a torn mix of old and new months. The reference
-never has this problem because MergeTree part replacement is atomic under
-a snapshot (`OPTIMIZE TABLE ... FINAL` swaps parts inside the engine —
+The reference gets atomic part replacement from MergeTree under a
+snapshot (`OPTIMIZE TABLE ... FINAL` swaps parts inside the engine —
 `initial-load/scripts/04-optimize-tables.sql:26-48`). The usual cluster
 answer is a transactional table format (Delta, Iceberg), but those need
 jars this environment cannot fetch — so this module implements the part
-of their design the maintenance jobs actually need, following the PUBLIC
-Delta Lake transaction-log protocol idea (an ordered log of add/remove
-file actions; readers resolve a snapshot, writers commit optimistically):
+of their design the engine needs, following the PUBLIC Delta Lake
+transaction-log protocol idea (an ordered log of add/remove file
+actions; readers resolve a snapshot, writers commit optimistically):
 
 - ``_txn_log/<version>.json`` files record ``add``/``remove`` actions
   over data files (paths relative to the table root). A version is
@@ -24,6 +24,9 @@ file actions; readers resolve a snapshot, writers commit optimistically):
   generations stay on disk until :func:`vacuum`, so a reader holding
   version N is never affected by a concurrent swap: NO reader-visible
   gap, NO torn months.
+- A table is month-partitioned (``event_month=<m>/`` directories) or
+  flat: part-files at the table root belong to month ``""``
+  (quarantine, changelog).
 - Writers that lose the version race reload the commits they missed: if
   the interfering commits touch disjoint months the swap rebases onto
   the new head and retries; overlapping months raise
@@ -52,8 +55,6 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-
-from neo4j_to_clickhouse_spark.operators.maintenance import PartitionStore
 
 LOG_DIR = "_txn_log"
 CHECKPOINT_EVERY = 10
@@ -136,14 +137,44 @@ def _rename_into_live(src: Path, live_dir: Path, name: str) -> None:
     os.utime(dest)
 
 
+def _data_dirs(root: Path) -> list[tuple[Path, str]]:
+    """(directory, relative prefix) of every place a part-file may live:
+    the root itself (month ``""``) and each ``event_month=<m>/`` dir."""
+    return [(root, "")] + [
+        (d, f"{d.name}/") for d in sorted(root.glob("event_month=*"))
+    ]
+
+
+def _is_data(f: Path) -> bool:
+    return f.is_file() and not f.name.startswith(("_", "."))
+
+
 def _scan_existing_files(table_path: str) -> list[str]:
+    return [
+        rel + f.name
+        for d, rel in _data_dirs(Path(table_path))
+        for f in sorted(d.iterdir())
+        if _is_data(f)
+    ]
+
+
+def _land(table_path: str, staging_path: str, prefix: str) -> list[str]:
+    """Move a staged Spark write's part-files into the table under
+    ``<prefix><i>.parquet`` names, each into the month directory it was
+    staged under (root-level part-files to the table root), then drop the
+    staging dir. Returns the table-relative paths. The landed files stay
+    invisible to snapshot readers until a commit adds them; a crash
+    before that leaves vacuum-reclaimable orphans."""
     root = Path(table_path)
-    files = []
-    for month_dir in sorted(root.glob("event_month=*")):
-        for f in sorted(month_dir.iterdir()):
-            if f.is_file() and not f.name.startswith(("_", ".")):
-                files.append(f"{month_dir.name}/{f.name}")
-    return files
+    adds: list[str] = []
+    for src_dir, rel in _data_dirs(Path(staging_path)):
+        for f in sorted(src_dir.iterdir()):
+            if _is_data(f):
+                name = f"{prefix}{len(adds):05d}.parquet"
+                _rename_into_live(f, root / rel, name)
+                adds.append(rel + name)
+    shutil.rmtree(staging_path, ignore_errors=True)
+    return adds
 
 
 def ensure_log(table_path: str) -> int:
@@ -274,21 +305,24 @@ def read_table(
     )
 
 
-class TxnLogPartitionStore(PartitionStore):
-    """Transactional :class:`PartitionStore` over plain Parquet + the
-    commit log above. Drop-in for ``compact``/``apply_retention``:
-    swaps and retention drops are atomic single-file commits, readers
-    pinned to a snapshot never see a gap, and a crash at ANY point
-    leaves the table at the last committed version (orphaned staged
-    files are invisible until vacuum reclaims them)."""
+class TxnLogPartitionStore:
+    """The writer side of the commit log above: month swaps for
+    ``compact``, retention drops, streaming micro-batches and batch
+    loads, each one atomic single-file commit. Readers pinned to a
+    snapshot never see a gap, and a crash at ANY point leaves the table
+    at the last committed version (orphaned staged files are invisible
+    until vacuum reclaims them), so there is nothing to recover.
+    Stateless: the maintenance jobs and ``StreamConfig`` take an
+    instance only so tests can inject a subclass that races a commit."""
 
     def read(self, spark: SparkSession, table_path: str) -> DataFrame:
+        """The latest snapshot, adopting a plain table first."""
         ensure_log(table_path)
         return read_table(spark, table_path)
 
     def begin_rewrite(
         self, spark: SparkSession, table_path: str
-    ) -> tuple[DataFrame, object | None]:
+    ) -> tuple[DataFrame, tuple[int, list[str]]]:
         """Pinned read for a rewrite: the returned base token carries the
         resolved (version, files) so :meth:`replace_months` computes its
         remove-set against exactly what the rewrite read. Without the
@@ -301,7 +335,8 @@ class TxnLogPartitionStore(PartitionStore):
         version, files = snapshot(table_path)
         return read_table(spark, table_path, version), (version, files)
 
-    def live_files(self, table_path: str) -> list[str] | None:
+    def live_files(self, table_path: str) -> list[str]:
+        """Table-relative paths of the latest snapshot's data files."""
         ensure_log(table_path)
         return snapshot(table_path)[1]
 
@@ -310,8 +345,13 @@ class TxnLogPartitionStore(PartitionStore):
         table_path: str,
         staging_path: str,
         months: list[str],
-        base: object | None = None,
+        base: tuple[int, list[str]] | None = None,
     ) -> None:
+        """Swap the ``event_month=<m>`` partitions under ``staging_path``
+        in for every month in ``months`` as one commit; a month with no
+        staged output (fully deduped/compacted away) is removed. ``base``
+        is the :meth:`begin_rewrite` pin of the snapshot the staged
+        output was computed from."""
         if not months:
             return  # nothing was read by the compaction: no commit to make
         # months must be the str form file paths use: an int 202602 (from
@@ -333,6 +373,9 @@ class TxnLogPartitionStore(PartitionStore):
         self._commit_swap(table_path, base_version, base_files, months, adds)
 
     def drop_months(self, table_path: str, cutoff_month: str) -> list[str]:
+        """Logically drop every month strictly older than
+        ``cutoff_month`` in one commit (bytes go at :func:`vacuum`);
+        return the dropped month names."""
         cutoff_month = str(cutoff_month)  # match _month_of's str form
         ensure_log(table_path)
         while True:
@@ -355,12 +398,6 @@ class TxnLogPartitionStore(PartitionStore):
             except FileExistsError:
                 continue  # recompute against the new head and retry
 
-    def recover(self, table_path: str) -> list[str]:
-        """Transactional: nothing to finish or roll back. A crash before
-        the commit left only orphaned (unreferenced, invisible) staged
-        files; vacuum reclaims them."""
-        return []
-
     def commit_batch(
         self, table_path: str, adds: list[str], batch_tag: str
     ) -> None:
@@ -376,13 +413,13 @@ class TxnLogPartitionStore(PartitionStore):
         :class:`ConcurrentSwapError` — a concurrent compact of the same
         month conservatively loses instead (ITS removes went stale).
 
-        One documented corner survives (identically in the rename
-        protocol): if a compact runs BETWEEN a batch's crash and its
-        replay, the compacted generation absorbed the first attempt's
-        rows under store-chosen file names the replay's tag cannot
-        match, so the replayed events exist twice until the next
-        ``compact(keep='events')`` — the standard exact-duplicate
-        backstop (`streaming/pipeline.py` module docstring)."""
+        One documented corner survives: if a compact runs BETWEEN a
+        batch's crash and its replay, the compacted generation absorbed
+        the first attempt's rows under store-chosen file names the
+        replay's tag cannot match, so the replayed events exist twice
+        until the next ``compact(keep='events')`` — the standard
+        exact-duplicate backstop (`streaming/pipeline.py` module
+        docstring)."""
         ensure_log(table_path)
         while True:
             version, files = snapshot(table_path)
@@ -409,32 +446,33 @@ class TxnLogPartitionStore(PartitionStore):
             except FileExistsError:
                 continue
 
+    def commit_load(self, table_path: str, staging_path: str) -> None:
+        """Publish a batch load's staged part-files as one commit. On a
+        table with no log yet, :func:`ensure_log` adopts the landed files
+        (with any plain part-files already there) as version 0 instead."""
+        tag = f"load-{uuid.uuid4().hex[:12]}-"
+        adds = _land(table_path, staging_path, tag)
+        ensure_log(table_path)
+        if not set(adds) <= set(snapshot(table_path)[1]):
+            # the tag is unique to this load: the commit's removes can
+            # only be landed files a concurrent bootstrap adopted first,
+            # and the same commit adds them back
+            self.commit_batch(table_path, adds, tag)
+
     # -- internals ----------------------------------------------------
 
     def _ingest_staged(
         self, table_path: str, staging_path: str, months: list[str]
     ) -> dict[str, list[str]]:
-        """Move staged data files into their live month directories under
-        generation-unique names; return {month: [relative paths]}. The
-        moves happen BEFORE the commit, so a crash here orphans files
-        without ever making them visible."""
-        root = Path(table_path)
-        staging = Path(staging_path)
+        """Land staged data files under generation-unique names; return
+        {month: [relative paths]} for every month in ``months`` (empty
+        when fully compacted/deduped away). The moves happen BEFORE the
+        commit, so a crash here orphans files without ever making them
+        visible."""
+        adds: dict[str, list[str]] = {m: [] for m in months}
         gen = uuid.uuid4().hex[:12]
-        adds: dict[str, list[str]] = {}
-        for month in months:
-            staged = staging / f"event_month={month}"
-            adds[month] = []
-            if not staged.is_dir():
-                continue  # fully compacted/deduped away -> month vanishes
-            live_dir = root / f"event_month={month}"
-            live_dir.mkdir(exist_ok=True)
-            for i, f in enumerate(sorted(staged.iterdir())):
-                if not f.is_file() or f.name.startswith(("_", ".")):
-                    continue
-                name = f"gen-{gen}-{i:05d}.parquet"
-                _rename_into_live(f, live_dir, name)
-                adds[month].append(f"event_month={month}/{name}")
+        for f in _land(table_path, staging_path, f"gen-{gen}-"):
+            adds.setdefault(_month_of(f), []).append(f)
         return adds
 
     def _commit_swap(
@@ -541,25 +579,14 @@ def stage_batch_files(
 
     ``ensure_log`` runs BEFORE any rename: on a not-yet-bootstrapped
     table a concurrent bootstrap (e.g. a compaction's ``store.read``)
-    would otherwise adopt the half-staged, uncommitted batch into v0."""
+    would otherwise adopt the half-staged, uncommitted batch into v0.
+    Part-files at the staging root (an unpartitioned sink: quarantine,
+    changelog) land at the table root."""
     ensure_log(table_path)
     query = "".join(c for c in query_name if c.isalnum() or c in "_-")
     tag = f"batch-{query + '~' if query else ''}{batch_id:09d}-"
     gen = uuid.uuid4().hex[:12]
-    root, staging = Path(table_path), Path(staging_path)
-    adds: list[str] = []
-    i = 0
-    for month_dir in sorted(staging.glob("event_month=*")):
-        live_dir = root / month_dir.name
-        live_dir.mkdir(parents=True, exist_ok=True)
-        for f in sorted(month_dir.iterdir()):
-            if f.is_file() and not f.name.startswith(("_", ".")):
-                name = f"{tag}gen-{gen}-{i:05d}.parquet"
-                _rename_into_live(f, live_dir, name)
-                adds.append(f"{month_dir.name}/{name}")
-                i += 1
-    shutil.rmtree(staging, ignore_errors=True)
-    return adds, tag
+    return _land(table_path, staging_path, f"{tag}gen-{gen}-"), tag
 
 
 def vacuum(
@@ -621,27 +648,28 @@ def vacuum(
     # may run concurrently (e.g. a scheduled maintenance_cycle and a
     # manual one) and either may reclaim a file between the other's
     # listing and its stat/unlink — losing that race is success
-    for month_dir in sorted(root.glob("event_month=*")):
+    for data_dir, rel in _data_dirs(root):
         try:
-            entries = sorted(month_dir.iterdir())
+            entries = sorted(data_dir.iterdir())
         except FileNotFoundError:
             continue  # the other vacuum reaped the whole dir
         for f in entries:
-            rel = f"{month_dir.name}/{f.name}"
+            path = rel + f.name
             try:
                 if (
-                    f.is_file()
-                    and not f.name.startswith(("_", "."))
-                    and rel not in keep
+                    _is_data(f)
+                    and path not in keep
                     and f.stat().st_mtime <= age_cutoff
                 ):
                     f.unlink()
                     # Hadoop's local ChecksumFileSystem writes a .crc
                     # sidecar per data file; reclaim it with its file
-                    (month_dir / f".{f.name}.crc").unlink(missing_ok=True)
-                    deleted.append(rel)
+                    (data_dir / f".{f.name}.crc").unlink(missing_ok=True)
+                    deleted.append(path)
             except FileNotFoundError:
                 continue
+        if data_dir == root:
+            continue  # the table root itself is never reaped
         # reap a month dir holding no DATA files (sidecars/markers were
         # reclaimed above), past the age guard, via os.rmdir — NOT
         # rmtree: rmdir is atomic against non-emptiness, so a writer's
@@ -651,10 +679,10 @@ def vacuum(
         # re-mkdir and retry (see _rename_into_live).
         try:
             if (
-                not any(month_dir.iterdir())
-                and month_dir.stat().st_mtime <= age_cutoff
+                not any(data_dir.iterdir())
+                and data_dir.stat().st_mtime <= age_cutoff
             ):
-                month_dir.rmdir()
+                data_dir.rmdir()
         except OSError:
             continue  # not empty after all, or the other vacuum got it
     oldest = retained[0]

@@ -10,6 +10,9 @@ come from ``uuid()`` (the loader's ``uuid.uuid4()``, `:111,188`).
 
 from __future__ import annotations
 
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +22,7 @@ from neo4j_to_clickhouse_spark.functions.scalar import (
     normalize_labels,
     valid_json_or_empty,
 )
+from neo4j_to_clickhouse_spark.operators.txn_store import TxnLogPartitionStore
 from neo4j_to_clickhouse_spark.schemas import (
     SNAPSHOT_NODES_CSV_SCHEMA,
     SNAPSHOT_RELS_CSV_SCHEMA,
@@ -97,17 +101,23 @@ def load_relationship_snapshot(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_events(df: DataFrame, path: str, mode: str = "append") -> None:
+def write_events(df: DataFrame, path: str) -> None:
     """Sink: month-partitioned, time-sorted parquet — the analogue of
     MergeTree ``PARTITION BY toYYYYMM ORDER BY (event_timestamp, event_id)``
     (`clickhouse/init/01-init-tables.sql:17-19`). ``sortWithinPartitions``
     tightens parquet row-group min/max stats so time-range predicates skip
     row groups, standing in for the sparse primary index.
+
+    The load is appended as one commit of the table's transaction log
+    (:mod:`..operators.txn_store`; read it back with ``read_table``): it is
+    staged in a hidden dir, then its files are moved in and committed. On
+    a path with no log yet the load is version 0.
     """
+    staging = os.path.join(path, f".load-{uuid.uuid4().hex[:12]}")
     (
         df.repartition("event_month")
         .sortWithinPartitions("event_timestamp", "event_id")
-        .write.mode(mode)
-        .partitionBy("event_month")
-        .parquet(path)
+        .write.partitionBy("event_month")
+        .parquet(staging)
     )
+    TxnLogPartitionStore().commit_load(path, staging)

@@ -6,29 +6,29 @@ materialized view + MergeTree insert (`clickhouse/init/01-init-tables.sql:
 
     source (Kafka topic / file stream)
       -> envelope parse + projection  (identical code to batch ingest)
-      -> foreachBatch: month-partitioned parquet append + quarantine append
+      -> foreachBatch: one transaction-log commit into the month-partitioned
+         event table + one into the quarantine table
 
 Design decisions, mapped to reference behavior:
 
 - **Exactly-once effect.** The reference is at-least-once (auto-commit
   consumer, `clickhouse/config/config.xml:13-14`) and defers dedup to
   `OPTIMIZE FINAL`. We checkpoint offsets AND make the sink write itself
-  idempotent: each micro-batch lands in a hidden staging dir, then moves
-  into the table under deterministic ``batch-<id>-<i>`` file names, with
-  any stale files of the same batch id removed first. A batch replayed
-  after a crash (the at-least-once window between data write and
-  checkpoint commit) therefore *replaces* its own partial output instead
-  of appending a duplicate — raw-table consumers see each event once
+  idempotent: each micro-batch is written to a hidden staging dir, moved
+  into the table under batch-tagged ``batch-[<query>~]<id>-`` file names
+  and published as ONE commit of the table's transaction log
+  (:mod:`..operators.txn_store`), which also removes the files of any
+  earlier attempt of the same batch id. A batch replayed after a crash
+  (the at-least-once window between data write and checkpoint commit)
+  therefore *replaces* its own output instead of appending a duplicate,
+  and a concurrent snapshot reader never sees a half-published batch —
+  consumers reading through ``txn_store.read_table`` see each event once
   without needing ``dedup_exact_events`` (which remains as
-  defense-in-depth for upstream producer duplicates). This is the local-FS
-  realization; on a cluster the same protocol rides HDFS atomic rename, or
-  a transactional table format (Delta/Iceberg) replaces it wholesale.
-  ``StreamConfig(store=TxnLogPartitionStore())`` upgrades it in place:
-  each batch publishes as one atomic commit-log entry, closing the
-  rename protocol's partial-visibility window for concurrent readers.
+  defense-in-depth for upstream producer duplicates). The quarantine
+  table commits the same way.
 - **Quarantine, not stall.** Poison messages blocked the reference's
   consumer until manual DETACH/ATTACH (`docs/ISSUES-AND-FIXES.md:188-205`).
-  Here unparseable/incomplete envelopes land in a quarantine directory with
+  Here unparseable/incomplete envelopes land in a quarantine table with
   a reason column (M5) and the stream never stops.
 - **Latency SLO.** ``trigger(processingTime='1 second')`` matches the
   1 s CDC poll interval (`kafka-connect/neo4j-cdc-nodes-source.json:9`) and
@@ -44,16 +44,21 @@ Design decisions, mapped to reference behavior:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql.streaming import StreamingQuery
 
 from neo4j_to_clickhouse_spark.operators.ingest import (
     IngestResult,
     node_events_from_raw,
     relationship_events_from_raw,
+)
+from neo4j_to_clickhouse_spark.operators.txn_store import (
+    TxnLogPartitionStore,
+    stage_batch_files,
 )
 from neo4j_to_clickhouse_spark.sources.envelopes import parse_envelopes
 
@@ -62,26 +67,16 @@ from neo4j_to_clickhouse_spark.sources.envelopes import parse_envelopes
 class StreamConfig:
     """Sink layout + cadence for one entity-kind stream.
 
-    ``store``: pass a
-    :class:`~neo4j_to_clickhouse_spark.operators.txn_store.TxnLogPartitionStore`
-    to publish each micro-batch as ONE atomic transaction-log commit —
-    concurrent readers then never see a partially-promoted batch (the
-    rename protocol's one remaining gap) and batch replay is an atomic
-    replace. This is the RECOMMENDED sink protocol. Default ``None``
-    resolves per-table, like the maintenance jobs
-    (:func:`~neo4j_to_clickhouse_spark.operators.maintenance.resolve_store`):
-    a ``_txn_log``-adopted table transacts automatically (rename-promoting
-    into a logged table would land files the snapshot never sees), a
-    plain table keeps the rename protocol. The quarantine sink always
-    uses renames: it is an append-only audit log, not a snapshot-read
-    table."""
+    ``store`` publishes each micro-batch of both sinks as one
+    transaction-log commit; read the tables with
+    ``txn_store.read_table``."""
 
     table_path: str
     quarantine_path: str
     checkpoint_path: str
     processing_time: str | None = "1 second"  # None -> availableNow drain
     coalesce_output: int | None = None  # small-file control per micro-batch
-    store: object | None = None  # duck-typed: needs .commit_batch
+    store: TxnLogPartitionStore = TxnLogPartitionStore()
 
 
 def dedup_within_watermark(
@@ -93,8 +88,8 @@ def dedup_within_watermark(
     """In-flight guard against upstream PRODUCER duplicates (the same
     event id emitted twice by the source, possibly in different
     micro-batches) — the failure mode the sink's replay-idempotent
-    rename protocol cannot see, because both copies are legitimate new
-    data to the sink.
+    commit cannot see, because both copies are legitimate new data to
+    the sink.
 
     ``dropDuplicatesWithinWatermark`` keeps one row per id while the id
     is inside the watermark, with state EVICTED as the watermark passes —
@@ -107,41 +102,28 @@ def dedup_within_watermark(
         .dropDuplicatesWithinWatermark([id_col])
 
 
-def _promote_staged(
-    staging: str, dest_root: str, batch_id: int, query_name: str = ""
+def _sink_batch(
+    writer: DataFrameWriter,
+    path: str,
+    batch_id: int,
+    query_name: str,
+    store: TxnLogPartitionStore,
 ) -> None:
-    """Move staged part-files into the table under deterministic
-    ``batch-[<query>~]<id>-<i>`` names. Replay-safe: files from a
-    previous (crashed) attempt of the same batch are removed first, so
-    re-running a batch replaces its own output rather than duplicating
-    it — which is why ``query_name`` must namespace the prefix when two
-    queries share a destination (their batch-id sequences advance
-    independently; un-namespaced, one query's promote would delete the
-    other's committed files for the same id; the ``~`` separator keeps
-    tags prefix-unambiguous, same grammar as the txn store's
-    ``stage_batch_files``). Renames are same-filesystem ``os.replace``
-    (atomic per file); the staging dir name starts with '.' so Spark's
-    file listing never sees in-flight data."""
-    import glob
-    import os
-    import shutil
-
-    query = "".join(c for c in query_name if c.isalnum() or c in "_-")
-    prefix = f"batch-{query + '~' if query else ''}{batch_id:09d}-"
-    os.makedirs(dest_root, exist_ok=True)
-    for pat in ("event_month=*/", ""):
-        for stale in glob.glob(os.path.join(dest_root, pat + prefix + "*")):
-            os.remove(stale)
-    srcs = sorted(
-        glob.glob(os.path.join(staging, "event_month=*", "part-*"))
-        + glob.glob(os.path.join(staging, "part-*"))
-    )
-    for i, src in enumerate(srcs):
-        part_dir = os.path.dirname(os.path.relpath(src, staging))
-        dest_dir = os.path.join(dest_root, part_dir) if part_dir else dest_root
-        os.makedirs(dest_dir, exist_ok=True)
-        os.replace(src, os.path.join(dest_dir, f"{prefix}{i:05d}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
+    """Publish one micro-batch into the table at ``path`` as one commit:
+    Spark writes it to a hidden staging dir, the driver moves the files
+    in under the batch's tag and commits them, replacing any earlier
+    attempt of the same batch. The staging dir is query-namespaced: two
+    queries sharing a table reach the same batch ids near-simultaneously,
+    and a shared path would let one query's overwrite eat the other's
+    in-flight staged files."""
+    q = "".join(c for c in query_name if c.isalnum() or c in "_-")
+    staging = os.path.join(path, f".staging-{q + '~' if q else ''}{batch_id}")
+    writer.mode("overwrite").parquet(staging)
+    # the query name namespaces the batch tag: two queries writing the
+    # same table share batch-id sequences, and an un-namespaced replay
+    # of one would remove the other's committed batch-N files
+    adds, tag = stage_batch_files(path, staging, batch_id, query_name)
+    store.commit_batch(path, adds, tag)
 
 
 def _write_batch(
@@ -153,55 +135,21 @@ def _write_batch(
     """Sink one micro-batch: events to the month-partitioned table, bad rows
     to quarantine — idempotently (see module docstring). Runs on the driver
     per micro-batch (foreachBatch); the staged writes happen on executors,
-    the promote is a driver-side batch of atomic renames."""
-    import os
-
-    events = result.events
+    the commits are driver-side renames plus one log entry per table."""
+    events, bad = result.events, result.quarantine
     if config.coalesce_output:
         events = events.coalesce(config.coalesce_output)
-    # the staging dir must be query-namespaced too: two queries sharing
-    # the table reach the same batch ids near-simultaneously, and a
-    # shared path would let one query's overwrite/rmtree eat the
-    # other's in-flight staged files
-    q = "".join(c for c in query_name if c.isalnum() or c in "_-")
-    staging = os.path.join(
-        config.table_path, f".staging-{q + '~' if q else ''}{batch_id}"
-    )
-    (
-        events.write.mode("overwrite")
-        .partitionBy("event_month")
-        .parquet(staging)
-    )
-    store = config.store
-    if store is None:
-        from neo4j_to_clickhouse_spark.operators.maintenance import (
-            resolve_store,
-        )
-
-        store = resolve_store(config.table_path)
-    if hasattr(store, "commit_batch"):
-        from neo4j_to_clickhouse_spark.operators.txn_store import (
-            stage_batch_files,
-        )
-
-        # the query name namespaces the batch tag: two queries writing
-        # the same table share batch-id sequences, and an un-namespaced
-        # replay of one would remove the other's committed batch-N files
-        adds, tag = stage_batch_files(
-            config.table_path, staging, batch_id, query_name=query_name
-        )
-        store.commit_batch(config.table_path, adds, tag)
-    else:
-        _promote_staged(staging, config.table_path, batch_id, query_name)
-
-    bad = result.quarantine
-    if config.coalesce_output:
         bad = bad.coalesce(1)
-    q_staging = os.path.join(
-        config.quarantine_path, f".staging-{q + '~' if q else ''}{batch_id}"
+    _sink_batch(
+        events.write.partitionBy("event_month"),
+        config.table_path,
+        batch_id,
+        query_name,
+        config.store,
     )
-    bad.write.mode("overwrite").parquet(q_staging)
-    _promote_staged(q_staging, config.quarantine_path, batch_id, query_name)
+    _sink_batch(
+        bad.write, config.quarantine_path, batch_id, query_name, config.store
+    )
 
 
 def _start(

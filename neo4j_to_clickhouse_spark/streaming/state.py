@@ -4,10 +4,11 @@ The batch view (:mod:`..operators.latest_state`) recomputes the window over
 the whole log; this operator maintains the same result *incrementally*: one
 state cell per entity holding the winning ``(event_timestamp, event_id)``
 under the engine's total order, updated per micro-batch, emitting a row
-only when an entity's latest actually changes. The emitted changelog is
-append-only parquet; ``latest_events`` over the changelog IS the current
-state — same derivation contract as everywhere else in the engine, no
-special sink semantics.
+only when an entity's latest actually changes. The emitted changelog is an
+append-only transaction-logged parquet table; ``latest_events`` over
+``txn_store.read_table(spark, changelog_path)`` IS the current state —
+the same derivation contract as everywhere else in the engine, and the
+same sink as the ingest stream's.
 
 Scale notes: state is O(live entities) x ~3 small fields, hash-partitioned
 by entity across executors by the groupBy — the same partitioning the batch
@@ -26,6 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from neo4j_to_clickhouse_spark.operators.txn_store import TxnLogPartitionStore
+from neo4j_to_clickhouse_spark.streaming.pipeline import _sink_batch
 
 OUT_SCHEMA = (
     "entity_id string, event_timestamp timestamp, event_id string, "
@@ -88,22 +92,18 @@ def start_latest_state_stream(
     available_now: bool = False,
 ) -> StreamingQuery:
     """Run the tracker, appending the change rows to a parquet changelog.
-    ``latest_events(spark.read.parquet(changelog_path))`` is the current
-    state at any moment.
+    ``latest_events(txn_store.read_table(spark, changelog_path))`` is the
+    current state at any moment.
 
-    The changelog write uses the same staged-rename idempotency as the
-    ingest sink (:func:`..pipeline._promote_staged`): a micro-batch
-    replayed after a crash replaces its own output. (Consumers going
-    through ``latest_events`` would collapse duplicates anyway — this
-    keeps the raw changelog itself exactly-once.)"""
-    import os
-
-    from neo4j_to_clickhouse_spark.streaming.pipeline import _promote_staged
+    Each micro-batch of the changelog is one transaction-log commit, the
+    same sink as the ingest stream's (:func:`..pipeline._sink_batch`): a
+    micro-batch replayed after a crash replaces its own output. (Consumers
+    going through ``latest_events`` would collapse duplicates anyway —
+    this keeps the raw changelog itself exactly-once.)"""
+    store = TxnLogPartitionStore()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        staging = os.path.join(changelog_path, f".staging-{batch_id}")
-        batch_df.write.mode("overwrite").parquet(staging)
-        _promote_staged(staging, changelog_path, batch_id)
+        _sink_batch(batch_df.write, changelog_path, batch_id, "", store)
 
     writer = (
         tracked_latest_state(events_stream)

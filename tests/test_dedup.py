@@ -620,3 +620,65 @@ def test_dedup_by_pairs_keep_by_metric(spark):
         for r in dedup_by_pairs(df, pairs, "doc_id").select("doc_id").collect()
     )
     assert got_id == [1, 4, 5]
+
+
+def test_bind_store_half_rejects_extra_columns(spark):
+    from neo4j_to_clickhouse_spark.operators.dedup import _bind_store_half
+
+    good = spark.createDataFrame([(1, 2)], "id long, bucket long")
+    assert _bind_store_half(good, "bucket").columns == ["old_id", "bucket"]
+    renamed = spark.createDataFrame([(1, 2)], "doc long, b long")
+    assert _bind_store_half(renamed, "bucket").columns == ["old_id", "bucket"]
+    stamped = spark.createDataFrame(
+        [(1, 2, 0)], "id long, bucket long, batch long"
+    )
+    with pytest.raises(ValueError, match="batch"):
+        _bind_store_half(stamped, "bucket")
+    with pytest.raises(ValueError, match="not bindable"):
+        _bind_store_half(
+            spark.createDataFrame([(1, 2, 3)], "a long, b long, c long"),
+            "bucket",
+        )
+
+
+def test_dedup_incremental_store_bind_contract(spark):
+    """dedup_incremental's seen_hashes store binds by NAME with the
+    same loud-error contract as the LSH halves (VERDICT r13 item 5):
+    a named hash column rides along extra columns -> error; a
+    one-column frame of any name binds positionally."""
+    from neo4j_to_clickhouse_spark.operators.dedup import (
+        content_hash,
+        dedup_incremental,
+    )
+
+    batch = spark.createDataFrame(
+        [(0, "alpha beta"), (1, "alpha beta"), (2, "gamma")],
+        "doc_id long, text string",
+    )
+    seen = batch.filter("doc_id = 0").select(
+        content_hash("text").alias("content_hash")
+    )
+    got = sorted(
+        r["doc_id"]
+        for r in dedup_incremental(batch, seen, "doc_id", "text").collect()
+    )
+    assert got == [2]
+    # any one-column name binds positionally (legacy contract)
+    legacy = seen.select(F.col("content_hash").alias("h"))
+    got2 = sorted(
+        r["doc_id"]
+        for r in dedup_incremental(batch, legacy, "doc_id", "text").collect()
+    )
+    assert got2 == [2]
+    # a named hash column + a stray stamp fails loudly
+    stamped = seen.withColumn("batch", F.lit(0))
+    with pytest.raises(ValueError, match="unexpected columns.*batch"):
+        dedup_incremental(batch, stamped, "doc_id", "text")
+    # a multi-column frame with no recognizable hash column fails too
+    with pytest.raises(ValueError, match="not bindable"):
+        dedup_incremental(
+            batch,
+            spark.createDataFrame([("x", "y")], "a string, b string"),
+            "doc_id",
+            "text",
+        )

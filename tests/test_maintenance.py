@@ -17,6 +17,7 @@ from neo4j_to_clickhouse_spark.operators.maintenance import (
     compact,
     retention_months,
 )
+from neo4j_to_clickhouse_spark.operators.txn_store import read_table, snapshot
 from neo4j_to_clickhouse_spark.sources.snapshot import (
     load_node_snapshot,
     write_events,
@@ -48,7 +49,7 @@ def test_write_events_layout(spark, event_table):
 
 def test_compact_latest_keeps_one_row_per_entity(spark, event_table):
     compact(spark, event_table, keep="latest")
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     # 3 entities -> 3 rows; entity 1's survivor is the event_id tie-break
     # winner at the duplicated millisecond timestamp
     assert df.count() == 3
@@ -58,7 +59,7 @@ def test_compact_latest_keeps_one_row_per_entity(spark, event_table):
 
 def test_compact_events_drops_replayed_ids_only(spark, event_table):
     compact(spark, event_table, keep="events")
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     assert df.count() == 6  # 7 - 1 replayed duplicate
     assert df.select("event_id").distinct().count() == 6
 
@@ -72,7 +73,7 @@ def test_compact_only_touches_requested_months(spark, event_table):
     compact(spark, event_table, months=["202603"], keep="events")
     after_2602 = sorted(os.listdir(os.path.join(event_table, "event_month=202602")))
     assert after_2602 == before["event_month=202602"]  # untouched files
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     assert df.filter("event_month = '202602'").count() == 4
     assert df.filter("event_month = '202603'").count() == 2  # dup dropped
 
@@ -109,43 +110,6 @@ def test_table_stats_reports_per_month(spark, event_table):
     )
 
 
-def test_swap_recovery_rolls_back_and_forward(spark, event_table):
-    """A crash at any step of the partition swap must be recoverable: an
-    aside copy with no live dir rolls BACK; an aside copy alongside a live
-    dir rolls FORWARD; a bare marker is consistent already."""
-    import shutil
-    from pathlib import Path
-
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        LocalPartitionStore,
-    )
-
-    root = Path(event_table)
-    store = LocalPartitionStore()
-    n_before = spark.read.parquet(event_table).count()
-
-    # crash between steps 2 and 3: live renamed aside, new never arrived
-    (root / "event_month=202602").rename(root / ".old_202602")
-    (root / ".swap_202602").touch()
-    assert store.recover(event_table) == ["202602"]
-    assert (root / "event_month=202602").is_dir()
-    assert not (root / ".old_202602").exists()
-    assert spark.read.parquet(event_table).count() == n_before
-
-    # crash after step 3: new data live, aside not yet deleted
-    shutil.copytree(root / "event_month=202603", root / ".old_202603")
-    (root / ".swap_202603").touch()
-    assert store.recover(event_table) == ["202603"]
-    assert not (root / ".old_202603").exists()
-    assert spark.read.parquet(event_table).count() == n_before
-
-    # bare marker (crash before anything moved): just cleaned up
-    (root / ".swap_202602").touch()
-    assert store.recover(event_table) == ["202602"]
-    assert spark.read.parquet(event_table).count() == n_before
-    assert store.recover(event_table) == []
-
-
 def test_retention_month_arithmetic():
     assert retention_months("202604", days=90) == "202601"
     assert retention_months("202602", days=90) == "202511"
@@ -155,7 +119,7 @@ def test_retention_month_arithmetic():
 def test_apply_retention_drops_old_months(spark, event_table):
     dropped = apply_retention(spark, event_table, cutoff_month="202603")
     assert dropped == ["202602"]
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     assert df.select("event_month").distinct().collect()[0][0] == "202603"
 
 
@@ -210,10 +174,11 @@ def test_compact_removes_stale_rows_across_months(spark, tmp_path):
     path = str(tmp_path / "t")
     write_events(df, path)
     compact(spark, path, keep="latest")
-    out = spark.read.parquet(path).collect()
+    out = read_table(spark, path).collect()
     assert len(out) == 1
     assert out[0].event_id == "e2"
-    assert not os.path.isdir(os.path.join(path, "event_month=202602"))
+    # month A is gone from the snapshot (its bytes stay until vacuum)
+    assert not any(f.startswith("event_month=202602/") for f in snapshot(path)[1])
 
 
 def test_events_in_range_prunes_month_partitions(spark, event_table):
@@ -308,3 +273,50 @@ def test_distinct_sketches_merge_across_months(spark, event_table):
     # global merge (no grouping)
     total = merge_distinct_sketches(per_month, []).collect()[0]
     assert total.approx_distinct == 3
+
+
+def test_default_compaction_racing_a_writer_loses_nothing(
+    spark, node_raw, tmp_path, monkeypatch
+):
+    """A table loaded by write_events and never explicitly adopted, run
+    through the DEFAULT maintenance path while a streaming batch lands in
+    an affected month between compact's read and its swap: the swap is
+    refused, maintenance_cycle retries it, and no event is lost."""
+    from tests.conftest import _env
+
+    import neo4j_to_clickhouse_spark.operators.maintenance as M
+    from neo4j_to_clickhouse_spark.streaming import StreamConfig
+    from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
+
+    table = str(tmp_path / "events")
+    write_events(node_events_from_raw(node_raw).events, table)
+    late = node_events_from_raw(
+        spark.createDataFrame(
+            [(_env("late-1", "CREATE", "NODE_EVENT", "4:late:1",
+                   "2026-03-03T00:00:00.000+00:00", labels=["Person"],
+                   after={"name": "Late"}),)],
+            ["raw"],
+        )
+    )
+    config = StreamConfig(
+        table_path=table,
+        quarantine_path=str(tmp_path / "quarantine"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        coalesce_output=1,
+    )
+    real = M.dedup_exact_events
+    landed = []
+
+    def dedup_then_land(df):
+        # runs after compact's read, before its rewrite and swap
+        if not landed:
+            landed.append(True)
+            _write_batch(late, config, batch_id=0, query_name="live")
+        return real(df)
+
+    monkeypatch.setattr(M, "dedup_exact_events", dedup_then_land)
+    report = M.maintenance_cycle(spark, table, keep="events")
+    assert landed and report["swap_retries"] == 1
+    ids = sorted(r.event_id for r in read_table(spark, table).collect())
+    assert ids == ["late-1", "n-001", "n-002", "n-003", "n-004", "n-005",
+                   "n-006"]

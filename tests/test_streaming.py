@@ -10,6 +10,7 @@ from neo4j_to_clickhouse_spark.operators.latest_state import (
     current_state,
     dedup_exact_events,
 )
+from neo4j_to_clickhouse_spark.operators.txn_store import read_table
 from neo4j_to_clickhouse_spark.sources.envelopes import read_envelope_file
 from neo4j_to_clickhouse_spark.streaming import (
     StreamConfig,
@@ -86,7 +87,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
         coalesce_output=1,
     )
     _write_batch(node_events_from_raw(raw), config, batch_id=7)
-    n1 = spark.read.parquet(config.table_path).count()
+    n1 = read_table(spark, config.table_path).count()
     # plant a stale partial file from a "crashed" earlier attempt
     import shutil
 
@@ -95,11 +96,11 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     shutil.copy(part, month_dir / "batch-000000007-99999.parquet")
     # full replay of the same batch
     _write_batch(node_events_from_raw(raw), config, batch_id=7)
-    assert spark.read.parquet(config.table_path).count() == n1
-    assert spark.read.parquet(config.quarantine_path).count() == 1
+    assert read_table(spark, config.table_path).count() == n1
+    assert read_table(spark, config.quarantine_path).count() == 1
     # a DIFFERENT batch id appends (it is new data, not a replay)
     _write_batch(node_events_from_raw(raw), config, batch_id=8)
-    assert spark.read.parquet(config.table_path).count() == 2 * n1
+    assert read_table(spark, config.table_path).count() == 2 * n1
 
 
 def test_latest_state_over_streamed_table(spark, streamed_nodes):
@@ -346,7 +347,7 @@ def test_stateful_latest_state_tracker(spark, streamed_nodes, tmp_path):
     q.awaitTermination(180)
     if q.isActive:
         q.stop()
-    changelog = spark.read.parquet(str(tmp_path / "changelog"))
+    changelog = read_table(spark, str(tmp_path / "changelog"))
     got = {
         r.entity_id: (r.event_id, r.event_type)
         for r in latest_events(changelog).collect()
@@ -406,7 +407,7 @@ def test_stateful_tracker_on_rocksdb(spark, streamed_nodes, tmp_path):
     got = {
         r.entity_id: (r.event_id, r.event_type)
         for r in latest_events(
-            spark.read.parquet(str(tmp_path / "changelog"))
+            read_table(spark, str(tmp_path / "changelog"))
         ).collect()
     }
     want = {
@@ -418,6 +419,123 @@ def test_stateful_tracker_on_rocksdb(spark, streamed_nodes, tmp_path):
         p for p in (tmp_path / "ckpt" / "state").rglob("*.changelog")
     ]
     assert state_files, "RocksDB changelog checkpointing did not engage"
+
+
+def test_quarantine_crash_between_stage_and_commit(spark, node_raw, tmp_path):
+    """A crash after the quarantine sink landed its files but before it
+    committed them: the files stay invisible to read_table, the replay of
+    the batch id yields exactly one copy, and vacuum reclaims the
+    root-level orphan."""
+    import dataclasses
+
+    from neo4j_to_clickhouse_spark.operators.ingest import node_events_from_raw
+    from neo4j_to_clickhouse_spark.operators.txn_store import (
+        TxnLogPartitionStore,
+        vacuum,
+    )
+    from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
+
+    quarantine = str(tmp_path / "quarantine")
+
+    class CrashBeforeQuarantineCommit(TxnLogPartitionStore):
+        def commit_batch(self, table_path, adds, batch_tag):
+            if table_path == quarantine:
+                raise RuntimeError("crash before commit")
+            super().commit_batch(table_path, adds, batch_tag)
+
+    config = StreamConfig(
+        table_path=str(tmp_path / "events"),
+        quarantine_path=quarantine,
+        checkpoint_path=str(tmp_path / "ckpt"),
+        coalesce_output=1,
+    )
+    res = node_events_from_raw(node_raw)
+    _write_batch(res, config, batch_id=0)
+    crashing = dataclasses.replace(config, store=CrashBeforeQuarantineCommit())
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        _write_batch(res, crashing, batch_id=1)
+    assert read_table(spark, quarantine).count() == 1
+
+    _write_batch(res, config, batch_id=1)  # the replay
+    assert read_table(spark, quarantine).count() == 2
+    assert read_table(spark, config.table_path).count() == 2 * 7
+    deleted = vacuum(quarantine, retain_versions=1, min_age_s=0)
+    assert deleted
+    assert all(f.startswith("batch-000000001-") and "/" not in f for f in deleted)
+    assert read_table(spark, quarantine).count() == 2
+
+
+def test_changelog_crash_between_stage_and_commit(
+    spark, streamed_nodes, tmp_path, monkeypatch
+):
+    """The latest-state changelog sink crashing between landing a
+    micro-batch and committing it: the landed files stay invisible, the
+    restarted query replays the batch id into exactly one copy, and
+    vacuum reclaims the root-level orphan."""
+    from neo4j_to_clickhouse_spark.operators.latest_state import latest_events
+    from neo4j_to_clickhouse_spark.operators.txn_store import (
+        TxnLogPartitionStore,
+        snapshot,
+        vacuum,
+    )
+    from neo4j_to_clickhouse_spark.streaming.state import (
+        start_latest_state_stream,
+    )
+
+    table = str(streamed_nodes / "events")
+    changelog = str(tmp_path / "changelog")
+
+    def run():
+        q = start_latest_state_stream(
+            spark.readStream.schema(read_table(spark, table).schema)
+            .option("maxFilesPerTrigger", 1)  # several micro-batches
+            .parquet(table),
+            changelog_path=changelog,
+            checkpoint_path=str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        try:
+            q.awaitTermination(180)
+        finally:
+            if q.isActive:
+                q.stop()
+
+    real = TxnLogPartitionStore.commit_batch
+    calls = []
+
+    def crash_second_commit(self, table_path, adds, batch_tag):
+        calls.append(batch_tag)
+        if len(calls) == 2:
+            raise RuntimeError("crash before commit")
+        real(self, table_path, adds, batch_tag)
+
+    monkeypatch.setattr(TxnLogPartitionStore, "commit_batch", crash_second_commit)
+    with pytest.raises(Exception, match="crash before commit"):
+        run()
+    crashed_tag = calls[1]
+    committed = snapshot(changelog)[1]
+    assert committed and not any(f.startswith(crashed_tag) for f in committed)
+    landed = [p.name for p in (tmp_path / "changelog").glob(crashed_tag + "*")]
+    assert landed  # on disk, not in the snapshot
+    n_before = read_table(spark, changelog).count()
+
+    monkeypatch.setattr(TxnLogPartitionStore, "commit_batch", real)
+    run()  # restart from the checkpoint: the crashed batch id replays
+    changelog_df = read_table(spark, changelog)
+    assert changelog_df.count() > n_before
+    assert changelog_df.count() == changelog_df.distinct().count()
+    got = {
+        r.entity_id: (r.event_id, r.event_type)
+        for r in latest_events(changelog_df).collect()
+    }
+    want = {
+        r.entity_id: (r.event_id, r.event_type)
+        for r in latest_events(read_table(spark, table)).collect()
+    }
+    assert got == want
+    deleted = vacuum(changelog, retain_versions=1, min_age_s=0)
+    assert sorted(deleted) == sorted(landed)
+    assert read_table(spark, changelog).count() == changelog_df.count()
 
 
 # --- live Kafka path (gated: needs a broker + spark-sql-kafka) ---------------

@@ -2,12 +2,14 @@
 versioned commits over plain Parquet — snapshot isolation (no
 reader-visible gap during swaps), time travel, optimistic concurrency
 with disjoint-month rebase, logical retention + vacuum, and crash
-behavior (orphans invisible, recover a no-op).
+behavior (orphans invisible until vacuum).
 """
 
 from __future__ import annotations
 
 import json
+import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +20,7 @@ from neo4j_to_clickhouse_spark.operators.maintenance import (
     compact,
 )
 from neo4j_to_clickhouse_spark.operators.txn_store import (
+    LOG_DIR,
     ConcurrentSwapError,
     TxnLogPartitionStore,
     ensure_log,
@@ -32,7 +35,7 @@ from neo4j_to_clickhouse_spark.sources.snapshot import write_events
 @pytest.fixture()
 def event_table(spark, node_raw, tmp_path):
     """Same corpus as test_maintenance: 7 good events (one replayed
-    duplicate id) over months 202602/202603, plain partitioned Parquet."""
+    duplicate id) over months 202602/202603, loaded as version 0."""
     path = str(tmp_path / "events")
     write_events(node_events_from_raw(node_raw).events, path)
     return path
@@ -42,6 +45,7 @@ def test_bootstrap_matches_plain_read(spark, event_table):
     """ensure_log() adopts an existing plain table as version 0; the
     snapshot read returns exactly the directory read's rows, partition
     column included."""
+    shutil.rmtree(Path(event_table) / LOG_DIR)  # a plain Parquet table
     assert ensure_log(event_table) == 0
     plain = spark.read.parquet(event_table)
     snap = read_table(spark, event_table)
@@ -51,6 +55,19 @@ def test_bootstrap_matches_plain_read(spark, event_table):
     v, files = snapshot(event_table)
     assert v == 0
     assert files and all(f.startswith("event_month=") for f in files)
+
+
+def test_write_events_appends_through_the_log(spark, node_raw, tmp_path):
+    """A second write_events into a logged table must commit its files:
+    otherwise read_table cannot see them and vacuum deletes them as
+    unreferenced orphans."""
+    path = str(tmp_path / "events")
+    events = node_events_from_raw(node_raw).events
+    write_events(events, path)
+    ensure_log(path)
+    write_events(events, path)
+    vacuum(path, retain_versions=1, min_age_s=0)
+    assert read_table(spark, path).count() == 2 * 7
 
 
 def test_compact_swap_is_snapshot_isolated(spark, event_table):
@@ -146,8 +163,7 @@ def test_retention_is_metadata_only_until_vacuum(spark, event_table):
 
 def test_crash_orphans_are_invisible_and_vacuumed(spark, event_table):
     """A crash after staged files moved but BEFORE the commit must leave
-    readers on the old version; vacuum reclaims the orphans. recover()
-    is a documented no-op."""
+    readers on the old version; vacuum reclaims the orphans."""
     store = TxnLogPartitionStore()
     ensure_log(event_table)
     staging = event_table + "_staging"
@@ -159,7 +175,6 @@ def test_crash_orphans_are_invisible_and_vacuumed(spark, event_table):
     )
     # simulate the crash: ingest happens, the commit never does
     store._ingest_staged(event_table, staging, ["202602", "202603"])
-    assert store.recover(event_table) == []
     assert read_table(spark, event_table).count() == 7  # unaffected
     deleted = vacuum(event_table, retain_versions=1, min_age_s=0)
     assert deleted  # the orphaned gen-* files
@@ -316,27 +331,15 @@ def test_table_stats_reports_snapshot_not_directory(spark, event_table):
             per_month_files.get(f.split("=", 1)[1].split("/", 1)[0], 0) + 1
         )
     assert {m: r.n_files for m, r in snap_stats.items()} == per_month_files
-    # the DEFAULT call resolves the txn store from the table's _txn_log
-    # (sticky default, VERDICT r08 item 4) and matches the snapshot view
+    # the DEFAULT call matches the snapshot view
     default_stats = {
         r.event_month: r for r in table_stats(spark, event_table).collect()
     }
     assert {m: r.n_files for m, r in default_stats.items()} == per_month_files
-    # the explicit plain-store walk still shows the physical truth: MORE
-    # files than the snapshot (old generation on disk awaiting vacuum)
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        LocalPartitionStore,
-    )
-
-    plain_stats = {
-        r.event_month: r
-        for r in table_stats(
-            spark, event_table, store=LocalPartitionStore()
-        ).collect()
-    }
-    assert sum(r.n_files for r in plain_stats.values()) > sum(
-        r.n_files for r in snap_stats.values()
-    )
+    # the physical directories hold MORE files than the snapshot (old
+    # generation on disk awaiting vacuum)
+    on_disk = list(Path(event_table).glob("event_month=*/*.parquet"))
+    assert len(on_disk) > sum(r.n_files for r in snap_stats.values())
 
 
 def test_disjoint_month_race_under_real_threads(tmp_path):
@@ -464,9 +467,9 @@ def test_streaming_batch_commit_is_atomic_and_replay_safe(
     deleted = vacuum(config.table_path, retain_versions=1, min_age_s=0)
     assert deleted and all("batch-000000007-" in f for f in deleted)
     assert read_table(spark, config.table_path).count() == 2 * n1
-    # quarantine stayed on the plain rename protocol: one bad row from
-    # the replayed batch 7 (replaced, not duplicated) + one from batch 8
-    assert spark.read.parquet(config.quarantine_path).count() == 2
+    # quarantine commits the same way: one bad row from the replayed
+    # batch 7 (replaced, not duplicated) + one from batch 8
+    assert read_table(spark, config.quarantine_path).count() == 2
 
 
 def test_stream_drain_through_txn_store(spark, tmp_path):
@@ -584,6 +587,7 @@ def test_stage_batch_files_bootstraps_before_renames(spark, event_table, tmp_pat
         stage_batch_files,
     )
 
+    sh.rmtree(Path(event_table) / LOG_DIR)  # a plain Parquet table
     staging = tmp_path / "staging"
     sh.copytree(
         f"{event_table}/event_month=202602", staging / "event_month=202602"
@@ -655,48 +659,9 @@ def test_rename_into_live_survives_dir_removal(tmp_path):
     assert (live / "gen-1.parquet").read_bytes() == b"x"
 
 
-def test_default_store_sticks_to_adopted_table(spark, event_table):
-    """VERDICT r08 item 4: once a table is adopted by the txn store, the
-    DEFAULT maintenance path must keep using the log — a rename-swap
-    compact on a logged table would move files pinned snapshots still
-    reference. Un-adopted tables keep the plain rename protocol."""
-    from pathlib import Path
-
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        LocalPartitionStore,
-        resolve_store,
-        table_stats,
-    )
-
-    # plain table -> plain store, and a default compact leaves no log
-    assert isinstance(resolve_store(event_table), LocalPartitionStore)
-    compact(spark, event_table, keep="latest")
-    assert not (Path(event_table) / "_txn_log").exists()
-    assert spark.read.parquet(event_table).count() == 3
-
-    # one explicit adoption; every later DEFAULT call transacts
-    ensure_log(event_table)
-    assert isinstance(resolve_store(event_table), TxnLogPartitionStore)
-    compact(spark, event_table, keep="events")
-    ops = [h["op"] for h in history(event_table)]
-    assert ops == ["init", "replace_months"]
-    assert read_table(spark, event_table).count() == 3
-
-    # default retention on the adopted table is a metadata-only commit
-    dropped = apply_retention(spark, event_table, "202603")
-    assert dropped == ["202602"]
-    assert history(event_table)[-1]["op"] == "retention_drop"
-    assert (Path(event_table) / "event_month=202602").exists()  # until vacuum
-
-    # default table_stats reads the live snapshot, not the directory
-    stats = table_stats(spark, event_table)
-    assert [r.event_month for r in stats.collect()] == ["202603"]
-
-
 def test_stream_default_store_transacts_on_adopted_table(spark, node_raw, tmp_path):
-    """A StreamConfig with store=None writing into a txn-adopted table
-    must publish through the log (rename promotion would land files the
-    snapshot never sees)."""
+    """A StreamConfig with the DEFAULT store writing into a txn-adopted
+    table publishes through the log."""
     from neo4j_to_clickhouse_spark.streaming import StreamConfig
     from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
 
@@ -708,7 +673,6 @@ def test_stream_default_store_transacts_on_adopted_table(spark, node_raw, tmp_pa
         quarantine_path=str(tmp_path / "quarantine"),
         checkpoint_path=str(tmp_path / "ckpt"),
         coalesce_output=1,
-        store=None,  # <- default resolution must pick the txn store
     )
     res = node_events_from_raw(node_raw)
     _write_batch(res, config, batch_id=0, query_name="q")
@@ -1008,22 +972,6 @@ def test_int_months_still_replace(spark, event_table):
     assert read_table(spark, event_table).count() == 7
 
 
-def test_maintenance_cycle_plain_table(spark, event_table):
-    """On an un-adopted table the cycle stays on the rename protocol:
-    no log appears, no vacuum runs, results match a direct compact."""
-    from pathlib import Path
-
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        maintenance_cycle,
-    )
-
-    report = maintenance_cycle(spark, event_table, keep="events")
-    assert report["vacuumed_files"] == 0
-    assert report["compacted_months"] == ["202602", "202603"]
-    assert not (Path(event_table) / "_txn_log").exists()
-    assert spark.read.parquet(event_table).count() == 6  # replay dup gone
-
-
 def test_concurrent_vacuums_under_threads(tmp_path):
     """Two vacuum loops racing each other (scheduled cycle + manual run)
     while writers append: neither may crash — losing a per-file race to
@@ -1082,11 +1030,10 @@ def test_concurrent_vacuums_under_threads(tmp_path):
 
 
 def test_two_queries_share_plain_table_and_quarantine(spark, node_raw, tmp_path):
-    """r09 self-review: the RENAME protocol (plain tables + the
-    always-rename quarantine sink) must namespace batch files and
-    staging dirs by query exactly like the txn path — two queries share
-    batch-id sequences, and an un-namespaced promote of one would
-    delete the other's committed batch-N files."""
+    """Both sinks (events and quarantine) namespace batch files and
+    staging dirs by query — two queries share batch-id sequences, and an
+    un-namespaced replay of one would remove the other's committed
+    batch-N files."""
     from neo4j_to_clickhouse_spark.streaming import StreamConfig
     from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
 
@@ -1098,19 +1045,19 @@ def test_two_queries_share_plain_table_and_quarantine(spark, node_raw, tmp_path)
     )
     res = node_events_from_raw(node_raw)
     _write_batch(res, config, batch_id=7, query_name="qA")
-    n1 = spark.read.parquet(config.table_path).count()
-    nq1 = spark.read.parquet(config.quarantine_path).count()
+    n1 = read_table(spark, config.table_path).count()
+    nq1 = read_table(spark, config.quarantine_path).count()
     assert n1 == 7 and nq1 == 1
 
     # qB's batch 7 is different data: appends in BOTH sinks
     _write_batch(res, config, batch_id=7, query_name="qB")
-    assert spark.read.parquet(config.table_path).count() == 2 * n1
-    assert spark.read.parquet(config.quarantine_path).count() == 2 * nq1
+    assert read_table(spark, config.table_path).count() == 2 * n1
+    assert read_table(spark, config.quarantine_path).count() == 2 * nq1
 
     # replaying qA's batch 7 replaces only qA's generation in both
     _write_batch(res, config, batch_id=7, query_name="qA")
-    assert spark.read.parquet(config.table_path).count() == 2 * n1
-    assert spark.read.parquet(config.quarantine_path).count() == 2 * nq1
+    assert read_table(spark, config.table_path).count() == 2 * n1
+    assert read_table(spark, config.quarantine_path).count() == 2 * nq1
 
 
 def test_ingest_refreshes_mtime_for_age_guard(spark, event_table, tmp_path):

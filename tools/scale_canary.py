@@ -63,12 +63,10 @@ CEILINGS: dict[str, float | None] = {
     "quality_classifier_stats": None,
     "minhash_incremental_stats": None,
     "token_budget_mixture_stats": None,
-    # r13: the streaming chain's in_batch=True intra-batch near-dedup
-    # is exactly this composition (minhash_lsh_dedup pair graph ->
+    # r13: intra-batch near-dedup (minhash_lsh_dedup pair graph ->
     # duplicate_clusters -> dedup_by_pairs anti-join) over a
-    # planted-clone corpus — the stage start_corpus_neardup_stream
-    # documents as "the one batch-quadratic-ish stage"; canary it so a
-    # super-linear drift forces the bucketed-pair-graph fix
+    # planted-clone corpus, the one batch-quadratic-ish stage; canary it
+    # so a super-linear drift forces the bucketed-pair-graph fix
     "dedup_survivors_minhash": None,
     # r13: BPE encode (Arrow map + broadcast merges — must stay linear
     # in corpus bytes like the other scan-shaped Arrow stages)
