@@ -330,7 +330,7 @@ def sessionize(
     )
 
 
-# --- ClickHouse event-analytics parity: windowFunnel / retention ------------
+# --- ClickHouse event-analytics parity: windowFunnel / sequenceCount --------
 
 def window_funnel(
     events: DataFrame,
@@ -486,28 +486,6 @@ def sequence_count(
         )
         .filter(F.col("n_matches") >= 1)
     )
-
-
-def retention_cohort(
-    events: DataFrame,
-    conditions: list[Column],
-    key_col: str = "user_id",
-) -> DataFrame:
-    """ClickHouse ``retention``: one row of cohort counts — n keys
-    satisfying condition 1, n satisfying 1 AND 2, 1 AND 3, ... Output
-    columns r1..rN. One grouped pass (bool_or per condition per key) +
-    one global conditional count — two map-side-combinable aggregates."""
-    per_key = events.groupBy(key_col).agg(
-        *[F.max(c.cast("int")).alias(f"__c{i}") for i, c in enumerate(conditions)]
-    )
-    aggs = [F.count_if(F.col("__c0") == 1).alias("r1")]
-    for i in range(1, len(conditions)):
-        aggs.append(
-            F.count_if(
-                (F.col("__c0") == 1) & (F.col(f"__c{i}") == 1)
-            ).alias(f"r{i + 1}")
-        )
-    return per_key.agg(*aggs)
 
 
 # --- SCD2 state history (the interval complement of latest_state) ----------

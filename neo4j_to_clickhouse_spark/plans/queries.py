@@ -1,9 +1,15 @@
 """The engine's declared query inventory (SURVEY.md §2 + north-star ops).
 
-Each :class:`QuerySpec` pairs a Spark DataFrame program with the equivalent
-ANSI SQL for the DuckDB oracle. Specs without oracle SQL are operators whose
-hash functions are Spark-specific (xxhash64) or seeded-random — the driver
-records a rows-only check for those.
+Each :class:`QuerySpec` holds a Spark program and the ANSI SQL that the
+DuckDB oracle runs. Where that SQL is valid Spark SQL and is itself the
+computation the query documents, it is the program too (:func:`q_sql`):
+Spark runs the same text over views of the tables, and the oracle check
+compares the two engines on one query. Every other spec (:func:`q`)
+carries a hand-built DataFrame program — it calls a package operator,
+carries hand tuning, plans better than the SQL, or is checked against a
+closed-form oracle that never reads the payload. Specs without oracle
+SQL are operators whose hash functions are Spark-specific (xxhash64) or
+seeded-random; their check counts rows only.
 
 Determinism rules applied throughout (both sides):
 - every top-k carries a total-order tie-break;
@@ -21,6 +27,7 @@ the LLM-pipeline operators.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -32,36 +39,11 @@ from neo4j_to_clickhouse_spark.operators import dedup as D
 from neo4j_to_clickhouse_spark.operators import graph as G
 from neo4j_to_clickhouse_spark.operators import similarity as S
 from neo4j_to_clickhouse_spark.operators import text as TX
-from neo4j_to_clickhouse_spark.session import ensure_session_time_confs
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # The driver regenerates the fixtures between rounds and the `ts`
-        # physical type has varied: TIMESTAMP(NANOS) (only readable as a
-        # raw int64 via nanosAsLong), timestamp[us] (read as
-        # TIMESTAMP_NTZ), or a plain TIMESTAMP. Adapt to whatever is on
-        # disk and normalize to ONE canonical type — TIMESTAMP (LTZ)
-        # under a UTC session zone — so downstream epoch arithmetic and
-        # the DuckDB oracle (naive TIMESTAMP, same wall clock) agree.
-        # Conf application lives in session.ensure_session_time_confs
-        # (idempotent; needed only for sessions not built by get_spark,
-        # e.g. the verification driver's own).
-        ensure_session_time_confs(spark)
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type in ("bigint", "long"):
-            # legacy nanos-as-int64: truncate to micros, byte-identical
-            # to DuckDB's nanos->TIMESTAMP truncation
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif ts_type != "timestamp":
-            # TIMESTAMP_NTZ (or date/string): under a UTC session zone
-            # this cast is a pure re-tag of the same wall clock
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from neo4j_to_clickhouse_spark.schemas import TESTDATA_TABLES
+from neo4j_to_clickhouse_spark.sources.tables import (
+    load_table as _t,
+    register_views,
+)
 
 
 def _avg(col, scale: int = 6):
@@ -90,43 +72,53 @@ def q(name: str, oracle: str | None, doc: str = ""):
     return reg
 
 
+@dataclass(frozen=True)
+class SqlProgram:
+    """A Spark program that is its oracle SQL, run by Spark SQL.
+
+    A call registers temp views of only the tables the SQL names (one
+    parquet footer read each) and returns ``spark.sql(sql)``. Spark
+    analyzes the query at once, so the DataFrame keeps reading its
+    ``sf_dir`` after the views are re-registered for another one. The
+    views are session-global: two threads building for different
+    directories in one session at the same moment can read each other's.
+    """
+
+    sql: str
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        tables = tuple(
+            t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", self.sql)
+        )
+        register_views(spark, sf_dir, tables)
+        return spark.sql(self.sql)
+
+
+def q_sql(name: str, oracle: str, doc: str = "") -> None:
+    """Register a query whose program is its oracle SQL."""
+    QUERIES[name] = QuerySpec(spark=SqlProgram(oracle), oracle=oracle, doc=doc)
+
+
 # =====================================================================
 # Reference parity — aggregations (SURVEY.md §2.4)
 # =====================================================================
 
-@q(
+q_sql(
     "count_by_event_type",
     """SELECT event_type, count(*) AS cnt
        FROM events GROUP BY event_type
        ORDER BY cnt DESC, event_type""",
     "A1: the `make verify-clickhouse` query (README.md:440-447)",
 )
-def count_by_event_type(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "event_type")
-    )
 
 
-@q(
+q_sql(
     "count_distinct_by_type",
     """SELECT event_type, count(*) AS total,
               count(DISTINCT user_id) AS unique_entities
        FROM events GROUP BY event_type ORDER BY event_type""",
     "A2: test-scenarios/run_tests.py:91,104",
 )
-def count_distinct_by_type(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("total"),
-            F.countDistinct("user_id").alias("unique_entities"),
-        )
-        .orderBy("event_type")
-    )
 
 
 @q(
@@ -389,55 +381,31 @@ def topk_words_approx(spark, sf_dir):
     ).orderBy("source", F.col("est_count").desc(), "item")
 
 
-@q(
+q_sql(
     "payload_profile",
     """SELECT event_type, count(*) AS cnt,
               CAST(sum(length(props)) AS BIGINT) AS total_payload_chars
        FROM events GROUP BY event_type ORDER BY event_type""",
     "A4: sum(length(properties)) profiling (04-optimize-tables.sql:155,166)",
 )
-def payload_profile(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.length("props")).alias("total_payload_chars"),
-        )
-        .orderBy("event_type")
-    )
 
 
-@q(
+q_sql(
     "duplicate_keys",
     """SELECT user_id, count(*) AS cnt FROM events
        GROUP BY user_id HAVING count(*) > 1
        ORDER BY cnt DESC, user_id LIMIT 20""",
     "A5: GROUP BY ... HAVING count>1 (04-optimize-tables.sql:68-87)",
 )
-def duplicate_keys(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .orderBy(F.col("cnt").desc(), "user_id")
-        .limit(20)
-    )
 
 
-@q(
+q_sql(
     "global_totals",
     """SELECT count(*) AS total_events,
               count(DISTINCT user_id) AS total_entities
        FROM events""",
     "A6: global scalar aggregates (04-optimize-tables.sql:194-203)",
 )
-def global_totals(spark, sf_dir):
-    return _t(spark, sf_dir, "events").agg(
-        F.count("*").alias("total_events"),
-        F.countDistinct("user_id").alias("total_entities"),
-    )
 
 
 @q(
@@ -496,19 +464,12 @@ def summary_stats(spark, sf_dir):
 # Sorts / limits / sampling / set ops (SURVEY.md §2.6-2.7)
 # =====================================================================
 
-@q(
+q_sql(
     "latest_events",
     """SELECT event_id, ts, user_id, event_type FROM events
        ORDER BY ts DESC, event_id DESC LIMIT 10""",
     "O2: latest-n by time (README.md:364-365)",
 )
-def latest_events(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "event_type")
-        .orderBy(F.col("ts").desc(), F.col("event_id").desc())
-        .limit(10)
-    )
 
 
 @q(
@@ -525,16 +486,14 @@ def random_sample(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "sorted_regions",
     "SELECT r_regionkey, r_name FROM region ORDER BY r_name",
     "O4: plain sort by key",
 )
-def sorted_regions(spark, sf_dir):
-    return _t(spark, sf_dir, "region").select("r_regionkey", "r_name").orderBy("r_name")
 
 
-@q(
+q_sql(
     "union_counts",
     """SELECT 'customer' AS table_name, count(*) AS cnt FROM customer
        UNION ALL SELECT 'orders', count(*) FROM orders
@@ -542,39 +501,19 @@ def sorted_regions(spark, sf_dir):
        ORDER BY table_name""",
     "U1: UNION ALL of labeled counts (README.md:317-321)",
 )
-def union_counts(spark, sf_dir):
-    parts = []
-    for name in ("customer", "orders", "lineitem"):
-        parts.append(
-            _t(spark, sf_dir, name).agg(F.count("*").alias("cnt")).select(
-                F.lit(name).alias("table_name"), "cnt"
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("table_name")
 
 
 # =====================================================================
 # Predicates (SURVEY.md §2.2)
 # =====================================================================
 
-@q(
+q_sql(
     "filter_event_type",
     """SELECT event_id, user_id, value FROM events
        WHERE event_type = 'purchase'
        ORDER BY event_id LIMIT 50""",
     "P3: equality predicate on the event-type enum",
 )
-def filter_event_type(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "value")
-        .orderBy("event_id")
-        .limit(50)
-    )
 
 
 @q(
@@ -630,7 +569,7 @@ def filter_json_path_variant(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "filter_time_range",
     """SELECT event_type, count(*) AS cnt FROM events
        WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
@@ -638,17 +577,6 @@ def filter_json_path_variant(spark, sf_dir):
        GROUP BY event_type ORDER BY event_type""",
     "P6: temporal range predicate (README.md:583)",
 )
-def filter_time_range(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .filter(
-            (F.col("ts") >= F.lit("2024-01-10 00:00:00").cast("timestamp"))
-            & (F.col("ts") < F.lit("2024-01-20 00:00:00").cast("timestamp"))
-        )
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("event_type")
-    )
 
 
 @q(
@@ -673,7 +601,7 @@ def conjunctive_filters(spark, sf_dir):
 # Latest-state / dedup semantics (SURVEY.md §2.5, §2.9 M1-M3)
 # =====================================================================
 
-@q(
+q_sql(
     "latest_state_per_entity",
     """WITH ranked AS (
          SELECT event_type,
@@ -684,53 +612,24 @@ def conjunctive_filters(spark, sf_dir):
        WHERE rn = 1 GROUP BY event_type ORDER BY event_type""",
     "M1: OPTIMIZE FINAL semantics as window dedup (04-optimize-tables.sql:26-48)",
 )
-def latest_state_per_entity(spark, sf_dir):
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        _t(spark, sf_dir, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("event_type")
-        .agg(F.count("*").alias("entity_cnt"))
-        .orderBy("event_type")
-    )
 
 
-@q(
+q_sql(
     "dedup_validation",
     """SELECT count(*) AS entities_with_dups FROM (
          SELECT user_id FROM events WHERE event_type = 'signup'
          GROUP BY user_id HAVING count(*) > 1) t""",
     "M2: post-dedup validation — entities holding >1 event of one kind",
 )
-def dedup_validation(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") > 1)
-        .agg(F.count("*").alias("entities_with_dups"))
-    )
 
 
-@q(
+q_sql(
     "retention_candidates",
     """SELECT event_type, count(*) AS cnt FROM events
        WHERE ts < TIMESTAMP '2024-01-15 00:00:00'
        GROUP BY event_type ORDER BY event_type""",
     "M3: retention delete candidates (README.md:582-584), fixed cutoff",
 )
-def retention_candidates(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("event_type")
-    )
 
 
 # =====================================================================
@@ -893,42 +792,22 @@ def revenue_by_nation(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "order_priority_count",
     """SELECT o_orderpriority, count(*) AS order_cnt FROM orders
        WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
        GROUP BY o_orderpriority ORDER BY o_orderpriority""",
     "TPC-H Q4-style priority rollup with date filter",
 )
-def order_priority_count(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp"))
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_cnt"))
-        .orderBy("o_orderpriority")
-    )
 
 
-@q(
+q_sql(
     "acctbal_by_segment",
     """SELECT c_mktsegment, count(*) AS customers,
               CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
        FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""",
     "dimension rollup with exact decimal money sum",
 )
-def acctbal_by_segment(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "customer")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("customers"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_acctbal"),
-        )
-        .orderBy("c_mktsegment")
-    )
 
 
 # =====================================================================
@@ -1059,23 +938,13 @@ def graph_degree_topk(spark, sf_dir):
 # LLM-pipeline: deduplication (north star)
 # =====================================================================
 
-@q(
+q_sql(
     "dedup_exact_docs",
     """SELECT source, count(*) AS n_docs,
               count(DISTINCT md5(text)) AS n_unique
        FROM documents GROUP BY source ORDER BY source""",
     "exact content-hash dedup accounting per source",
 )
-def dedup_exact_docs(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct(F.md5("text")).alias("n_unique"),
-        )
-        .orderBy("source")
-    )
 
 
 @q(
@@ -4011,7 +3880,7 @@ def range_join_interval_stats(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "daily_moving_stats",
     # ClickHouse runningAccumulate / neighbor() idioms: running cumulative
     # total and a trailing 7-day moving average over the daily count
@@ -4034,26 +3903,6 @@ def range_join_interval_stats(spark, sf_dir):
     "counts (runningAccumulate/neighbor parity; window over the tiny "
     "pre-aggregate, never the log)",
 )
-def daily_moving_stats(spark, sf_dir):
-    daily = (
-        _t(spark, sf_dir, "events")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(F.count("*").alias("n_events"))
-    )
-    w = Window.orderBy("day")
-    return (
-        daily.select(
-            "day",
-            "n_events",
-            F.sum("n_events")
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("running_total"),
-            F.avg(F.col("n_events").cast("double"))
-            .over(w.rowsBetween(-6, 0))
-            .alias("ma7"),
-        )
-        .orderBy("day")
-    )
 
 
 @q(
@@ -4088,16 +3937,14 @@ def first_events_per_user(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "value_histogram",
     # ClickHouse histogram()-style distribution report, pinned to fixed
     # bins so it is deterministic (CH's adaptive bins are not): 10 equal
-    # buckets over [0, 1000) + the overflow bucket. width_bucket exists
-    # in both engines with identical semantics; one map-side-combinable
-    # aggregate, no shuffle beyond the 11-row result.
-    # DuckDB has no width_bucket; the closed form below IS its contract
-    # for (0, 1000, 10): bucket 0 under-range, 11 over-range, else
-    # floor(v/100)+1
+    # buckets over [0, 1000) + the overflow bucket, spelled as
+    # width_bucket(v, 0, 1000, 10)'s contract (bucket 0 under-range, 11
+    # over-range, else floor(v/100)+1) because DuckDB has no
+    # width_bucket; one map-side-combinable aggregate.
     """WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events)
        SELECT CASE WHEN v < 0 THEN 0
                    WHEN v >= 1000 THEN 11
@@ -4106,25 +3953,9 @@ def first_events_per_user(spark, sf_dir):
               CAST(min(v) AS DOUBLE) AS lo,
               CAST(max(v) AS DOUBLE) AS hi
        FROM v GROUP BY bucket ORDER BY bucket""",
-    "fixed-bin value histogram via width_bucket (histogram() parity, "
-    "deterministic bins)",
+    "fixed-bin value histogram in width_bucket's bins (histogram() "
+    "parity, deterministic bins)",
 )
-def value_histogram(spark, sf_dir):
-    v = F.col("value").cast("double")
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            F.width_bucket(v, F.lit(0.0), F.lit(1000.0), F.lit(10)).alias(
-                "bucket"
-            )
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.min(v).alias("lo"),
-            F.max(v).alias("hi"),
-        )
-        .orderBy("bucket")
-    )
 
 
 @q(
@@ -4283,7 +4114,7 @@ def duplicate_metadata_conflicts(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "revenue_by_part_type",
     # Q14-shape dimension join: lineitem revenue rolled up by part
     # type; the part dimension broadcasts (hint-free, AQE size-based).
@@ -4298,22 +4129,6 @@ def duplicate_metadata_conflicts(spark, sf_dir):
     "revenue by part type: fact-to-dimension broadcast join with "
     "decimal-exact revenue",
 )
-def revenue_by_part_type(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    rev = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
-    )
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy("p_type")
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.sum(rev).cast("decimal(28,4)").cast("double").alias("revenue"),
-        )
-        .orderBy("p_type")
-    )
 
 
 @q(
@@ -4430,7 +4245,7 @@ def event_share_of_total(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "user_entropy_bands",
     # Per-user Shannon entropy of the event-type mix (behavioral
     # diversity), banded around the fixture's quartiles (near-uniform
@@ -4459,36 +4274,6 @@ def event_share_of_total(spark, sf_dir):
     "behavioral diversity: per-user event-type Shannon entropy, "
     "banded (decimal-exact term summation)",
 )
-def user_entropy_bands(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    c = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("n"))
-    t = c.groupBy("user_id").agg(F.sum("n").cast("double").alias("tot"))
-    p = F.col("n") / F.col("tot")
-    e = (
-        c.join(t, "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.round(-p * F.log(p), 6).cast("decimal(18,6)")
-            )
-            .cast("double")
-            .alias("h")
-        )
-    )
-    band = (
-        F.when(F.col("h") < 1.568, "low")
-        .when(F.col("h") < 1.597, "mid")
-        .otherwise("high")
-    )
-    return (
-        e.groupBy(band.alias("band"))
-        .agg(
-            F.count("*").alias("n_users"),
-            (F.round(F.min("h"), 6) + F.lit(0.0)).alias("min_h"),
-            (F.round(F.max("h"), 6) + F.lit(0.0)).alias("max_h"),
-        )
-        .orderBy("band")
-    )
 
 
 @q(
@@ -4800,7 +4585,7 @@ def dedup_incremental_batch(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "clicker_purchaser_intersect",
     # INTERSECT / EXCEPT set-op surface (§2.7): users who both clicked
     # and purchased, and users who viewed but never purchased. Both
@@ -4821,29 +4606,6 @@ def dedup_incremental_batch(spark, sf_dir):
     "set-op funnel: INTERSECT (clicked AND purchased) and EXCEPT "
     "(viewed but never purchased) user counts",
 )
-def clicker_purchaser_intersect(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-
-    def users(t):
-        return (
-            ev.filter(F.col("event_type") == t)
-            .select("user_id")
-            .distinct()
-        )
-
-    both = (
-        users("click")
-        .intersect(users("purchase"))
-        .agg(F.count("*").alias("click_and_purchase"))
-    )
-    never = (
-        users("view")
-        .subtract(users("purchase"))
-        .agg(F.count("*").alias("view_never_purchase"))
-    )
-    # 1-row x 1-row crossJoin — the same scalar-combine shape as the
-    # graph/global-totals queries
-    return both.crossJoin(never)
 
 
 @q(
@@ -4893,7 +4655,7 @@ def daily_counts_gapfilled(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "customers_inactive_since",
     # NOT EXISTS as a left ANTI join (never a correlated re-scan):
     # customers with no order on/after 2000-01-01. The filter pushes to
@@ -4907,23 +4669,9 @@ def daily_counts_gapfilled(spark, sf_dir):
        ORDER BY c.c_custkey""",
     "anti-join churn probe: customers with no order since 2000",
 )
-def customers_inactive_since(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    recent = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return (
-        cust.join(recent, "c_custkey", "left_anti")
-        .select(
-            "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")
-        )
-        .orderBy("c_custkey")
-    )
 
 
-@q(
+q_sql(
     "urgent_customers_by_segment",
     # EXISTS as a left SEMI join: per market segment, how many customers
     # placed at least one 1-URGENT order. The semi join deduplicates on
@@ -4937,22 +4685,9 @@ def customers_inactive_since(spark, sf_dir):
        GROUP BY c.c_mktsegment ORDER BY segment""",
     "semi-join segmentation: customers with at least one urgent order",
 )
-def urgent_customers_by_segment(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    urgent = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return (
-        cust.join(urgent, "c_custkey", "left_semi")
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy("segment")
-    )
 
 
-@q(
+q_sql(
     "user_halves_churn",
     # FULL OUTER join of per-user activity in the two halves of the
     # event-log time range: retained / churned / new / reactivation-free
@@ -4977,54 +4712,9 @@ def urgent_customers_by_segment(spark, sf_dir):
     "full-outer churn accounting: users retained / churned / new "
     "between the two halves of the log's time range",
 )
-def user_halves_churn(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    b = ev.agg(
-        F.min("ts").cast("timestamp").alias("lo"),
-        F.max("ts").cast("timestamp").alias("hi"),
-    )
-    with_mid = ev.crossJoin(b).withColumn(
-        "__mid",
-        F.timestamp_micros(
-            (
-                F.unix_micros(F.col("lo"))
-                + (F.unix_micros(F.col("hi")) - F.unix_micros(F.col("lo")))
-                / 2
-            ).cast("long")
-        ),
-    )
-    h1 = (
-        with_mid.filter(F.col("ts") < F.col("__mid"))
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n1"))
-    )
-    h2 = (
-        with_mid.filter(F.col("ts") >= F.col("__mid"))
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n2"))
-    )
-    j = (
-        h1.join(h2, "user_id", "full_outer")
-        .select(
-            F.coalesce(F.col("n1"), F.lit(0)).alias("n1"),
-            F.coalesce(F.col("n2"), F.lit(0)).alias("n2"),
-        )
-    )
-    return j.agg(
-        F.sum(((F.col("n1") > 0) & (F.col("n2") > 0)).cast("long")).alias(
-            "retained"
-        ),
-        F.sum(((F.col("n1") > 0) & (F.col("n2") == 0)).cast("long")).alias(
-            "churned"
-        ),
-        F.sum(((F.col("n1") == 0) & (F.col("n2") > 0)).cast("long")).alias(
-            "new_users"
-        ),
-        F.sum(F.col("n1") + F.col("n2")).alias("total_events"),
-    )
 
 
-@q(
+q_sql(
     "shipping_priority",
     # TPC-H Q3 shape: segment-filtered customer x date-bracketed orders
     # x lineitem revenue, top 10 by revenue. DECIMAL-exact revenue sum
@@ -5045,34 +4735,9 @@ def user_halves_churn(spark, sf_dir):
     "TPC-H Q3 shipping priority: top unshipped-revenue orders for one "
     "market segment",
 )
-def shipping_priority(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    rev = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
-    )
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(rev).cast("decimal(28,4)").cast("double").alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), "l_orderkey")
-        .limit(10)
-    )
 
 
-@q(
+q_sql(
     "cube_event_counts",
     # CUBE sibling of the ROLLUP query: all four grouping combinations
     # in one pass. NULLS FIRST ordering spelled on both sides (Spark's
@@ -5084,19 +4749,9 @@ def shipping_priority(spark, sf_dir):
     "CUBE over (event_type, user bucket): every subtotal combination "
     "plus the grand total in one pass",
 )
-def cube_event_counts(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.cube("event_type", (F.col("user_id") % 5).alias("bucket"))
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(
-            F.col("event_type").asc_nulls_first(),
-            F.col("bucket").asc_nulls_first(),
-        )
-    )
 
 
-@q(
+q_sql(
     "value_deciles_by_type",
     # ntile(10) deciles with a TOTAL order (value, event_id) so tile
     # boundaries are engine-independent even for equal values.
@@ -5112,21 +4767,6 @@ def cube_event_counts(spark, sf_dir):
        ORDER BY event_type, decile""",
     "ntile(10) value deciles per event type with total-order tie-break",
 )
-def value_deciles_by_type(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    t = ev.select(
-        "event_type", "value", F.ntile(10).over(w).alias("decile")
-    )
-    return (
-        t.groupBy("event_type", "decile")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.min("value"), 6).alias("min_v"),
-            F.round(F.max("value"), 6).alias("max_v"),
-        )
-        .orderBy("event_type", "decile")
-    )
 
 
 @q(
@@ -5214,7 +4854,7 @@ def approx_percentile_bound(spark, sf_dir):
     ).orderBy("event_type")
 
 
-@q(
+q_sql(
     "conditional_aggregates",
     # ClickHouse's countIf/sumIf/avgIf idiom (ubiquitous in its dashboards)
     # = ANSI FILTER clause = Spark count_if / sum(when). One pass, one
@@ -5228,27 +4868,6 @@ def approx_percentile_bound(spark, sf_dir):
     "countIf/sumIf conditional aggregation (ClickHouse idiom -> count_if/"
     "sum(when)): single-pass multi-predicate rollup",
 )
-def conditional_aggregates(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy((F.col("user_id") % 10).alias("user_bucket"))
-        .agg(
-            F.count_if(F.col("event_type") == "INSERT").alias("n_inserts"),
-            F.count_if(F.col("event_type") == "DELETE").alias("n_deletes"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("value") > 100,
-                        F.col("value").cast("decimal(28,6)"),
-                    )
-                ),
-                F.lit(0).cast("decimal(28,6)"),
-            )
-            .cast("double")
-            .alias("big_value_sum"),
-        )
-        .orderBy("user_bucket")
-    )
 
 
 @q(
@@ -5285,7 +4904,7 @@ def argmax_event_per_user(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "sessionization",
     # gap-based sessions: lag to detect >30min gaps, running sum to number
     # them — identical construction on both engines (deterministic via the
@@ -5311,22 +4930,6 @@ def argmax_event_per_user(spark, sf_dir):
     "gap-based sessionization (30 min): per-user session counts via "
     "lag + running-sum windows, one shuffle",
 )
-def sessionization(spark, sf_dir):
-    from neo4j_to_clickhouse_spark.operators.analytics import sessionize
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 30)
-    s = sessionize(ev, "user_id", "ts", "event_id", gap_minutes=30)
-    per_session = s.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events")
-    )
-    return (
-        per_session.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.max("n_events").alias("max_session_events"),
-        )
-        .orderBy("user_id")
-    )
 
 
 @q(
@@ -5366,7 +4969,7 @@ def session_window_counts(spark, sf_dir):
     ).orderBy("user_id", "session_start")
 
 
-@q(
+q_sql(
     "rollup_event_counts",
     # ClickHouse's WITH ROLLUP = ANSI ROLLUP: subtotal rows per event_type
     # and a grand total, one pass. Neither grouping column is nullable in
@@ -5381,24 +4984,9 @@ def session_window_counts(spark, sf_dir):
     "WITH ROLLUP hierarchy: (type, bucket) -> type subtotals -> grand "
     "total in one aggregation pass",
 )
-def rollup_event_counts(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .rollup("event_type", (F.col("user_id") % 10).alias("user_bucket"))
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(28,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .orderBy(
-            F.col("event_type").asc_nulls_first(),
-            F.col("user_bucket").asc_nulls_first(),
-        )
-    )
 
 
-@q(
+q_sql(
     "window_funnel_steps",
     # ClickHouse windowFunnel parity: deepest strictly-time-ordered
     # signup -> purchase -> error chain per user, where EVERY signup
@@ -5432,24 +5020,9 @@ def rollup_event_counts(spark, sf_dir):
     "windowFunnel parity: signup -> purchase -> error ordered funnel "
     "within 48h of signup, users per deepest step reached",
 )
-def window_funnel_steps(spark, sf_dir):
-    from neo4j_to_clickhouse_spark.operators.analytics import window_funnel
-
-    ev = _t(spark, sf_dir, "events")
-    steps = [
-        F.col("event_type") == "signup",
-        F.col("event_type") == "purchase",
-        F.col("event_type") == "error",
-    ]
-    return (
-        window_funnel(ev, steps, "user_id", "ts", window_seconds=48 * 3600)
-        .groupBy("funnel_step")
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("funnel_step")
-    )
 
 
-@q(
+q_sql(
     "window_funnel_strict_order_steps",
     # strict_order mode: signup -> purchase -> error must be CONSECUTIVE
     # events per user (any interleaved event breaks the chain), within
@@ -5483,26 +5056,6 @@ def window_funnel_steps(spark, sf_dir):
     "windowFunnel strict_order parity: consecutive-event funnel via lead "
     "offsets — one window shuffle, no joins",
 )
-def window_funnel_strict_order_steps(spark, sf_dir):
-    from neo4j_to_clickhouse_spark.operators.analytics import (
-        window_funnel_strict_order,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    steps = [
-        F.col("event_type") == "signup",
-        F.col("event_type") == "purchase",
-        F.col("event_type") == "error",
-    ]
-    return (
-        window_funnel_strict_order(
-            ev, steps, "user_id", "ts", "event_id",
-            window_seconds=48 * 3600,
-        )
-        .groupBy("funnel_step")
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("funnel_step")
-    )
 
 
 @q(
@@ -5550,7 +5103,7 @@ def sequence_count_histogram(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "retention_cohort_counts",
     # ClickHouse retention() parity: users who signed up; of those, how
     # many purchased; and (cond1 AND condN per CH semantics) how many
@@ -5568,17 +5121,6 @@ def sequence_count_histogram(spark, sf_dir):
     "retention() parity: cohort counts for signup / signup+purchase / "
     "signup+error users",
 )
-def retention_cohort_counts(spark, sf_dir):
-    from neo4j_to_clickhouse_spark.operators.analytics import retention_cohort
-
-    return retention_cohort(
-        _t(spark, sf_dir, "events"),
-        [
-            F.col("event_type") == "signup",
-            F.col("event_type") == "purchase",
-            F.col("event_type") == "error",
-        ],
-    )
 
 
 @q(
@@ -6450,7 +5992,7 @@ def column_profile_events(spark, sf_dir):
     ).orderBy("column_name")
 
 
-@q(
+q_sql(
     "revenue_forecast",
     # TPC-H Q6 shape: the canonical predicate-pushdown showcase — a
     # one-row answer whose scan must push the shipdate range + discount
@@ -6467,27 +6009,6 @@ def column_profile_events(spark, sf_dir):
     "TPC-H Q6-style revenue forecast: tight multi-predicate scan, "
     "decimal-exact revenue, one-row answer (pushdown showcase)",
 )
-def revenue_forecast(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count("*").alias("n_rows"),
-        )
-    )
 
 
 @q(
@@ -6611,7 +6132,7 @@ def mixture_epochs_plan(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "value_corr_by_type",
     # Pearson correlation between event value and hour-of-day per type,
     # WITHOUT corr(): engine corr() accumulates doubles in partition
@@ -6641,36 +6162,6 @@ def mixture_epochs_plan(spark, sf_dir):
     "deterministic Pearson corr(value, hour) per event type via "
     "decimal-exact moment sums + one fixed closed-form double tree",
 )
-def value_corr_by_type(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    h = F.hour("ts")
-    m = ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("value"), 6).cast("decimal(28,6)")).alias("sx"),
-        F.sum(h).alias("sy"),
-        F.sum(
-            F.round(F.col("value") * h, 6).cast("decimal(28,6)")
-        ).alias("sxy"),
-        F.sum(
-            F.round(F.col("value") * F.col("value"), 6).cast(
-                "decimal(28,6)"
-            )
-        ).alias("sxx"),
-        F.sum(h * h).alias("syy"),
-    )
-    n = F.col("n")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy")
-    corr = (n * sxy - sx * sy) / (
-        F.sqrt(n * sxx - sx * sx)
-        * F.sqrt((n * syy).cast("double") - sy.cast("double") * sy.cast("double"))
-    )
-    return m.select(
-        "event_type", "n", (F.round(corr, 6) + F.lit(0.0)).alias("corr_value_hour")
-    ).orderBy("event_type")
 
 
 # =====================================================================
@@ -6678,7 +6169,7 @@ def value_corr_by_type(spark, sf_dir):
 # the language-ID evaluation matrix
 # =====================================================================
 
-@q(
+q_sql(
     "returned_item_revenue",
     # TPC-H Q10 shape: revenue lost to returned items per customer over
     # one half-year — the 3-table join where the fact table streams and
@@ -6699,35 +6190,9 @@ def value_corr_by_type(spark, sf_dir):
     "orders + returnflag-pruned fact scan, decimal-exact revenue, "
     "top-20 heap",
 )
-def returned_item_revenue(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1995-07-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    ).select("l_orderkey", "l_extendedprice", "l_discount")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
 
 
-@q(
+q_sql(
     "large_order_customers",
     # TPC-H Q18 shape (large-volume orders): orders whose total quantity
     # exceeds the threshold, with their customer. The HAVING runs on the
@@ -6746,30 +6211,6 @@ def returned_item_revenue(spark, sf_dir):
     "TPC-H Q18-style large-volume orders (sum(qty) > 250) joined back "
     "to their customers — pre-aggregate + HAVING before any dim join",
 )
-def large_order_customers(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    t = (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias(
-                "__qty"
-            )
-        )
-        .filter(F.col("__qty") > 250)
-    )
-    return (
-        t.join(o, t.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            F.col("__qty").cast("double").alias("total_qty"),
-        )
-        .orderBy(F.desc("total_qty"), "o_orderkey")
-    )
 
 
 @q(
@@ -7145,7 +6586,7 @@ def json_value_stats_by_type(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "user_growth_accounting",
     # Growth-accounting staple: per day, how many users appeared for the
     # FIRST time, plus the running total of ever-seen users. Two
@@ -7162,23 +6603,9 @@ def json_value_stats_by_type(spark, sf_dir):
     "user growth accounting: first-seen users per day + cumulative "
     "ever-seen total (windows touch the days-sized pre-aggregate only)",
 )
-def user_growth_accounting(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    f = ev.groupBy("user_id").agg(
-        F.min(F.col("ts").cast("date")).alias("day")
-    )
-    d = f.groupBy("day").agg(F.count("*").alias("new_users"))
-    cum = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return d.select(
-        "day",
-        "new_users",
-        F.sum("new_users").over(cum).cast("long").alias("cumulative_users"),
-    ).orderBy("day")
 
 
-@q(
+q_sql(
     "event_transition_matrix",
     # First-order Markov transition counts over each user's event
     # stream: lag() under the (ts, event_id) total order — ONE shuffle
@@ -7195,22 +6622,6 @@ def user_growth_accounting(spark, sf_dir):
     "behavioral transition matrix: per-user consecutive event-type "
     "pairs under a total (ts, event_id) order",
 )
-def event_transition_matrix(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        F.col("event_type"),
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    return (
-        s.filter(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .orderBy("from_type", "to_type")
-    )
 
 
 @q(
@@ -7352,7 +6763,7 @@ def nation_trade_volume(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "dup_rate_by_lang",
     # Per-language duplicate pressure: docs vs distinct bodies (md5
     # digests, bodies never shuffle) and the implied removal rate — the
@@ -7367,26 +6778,6 @@ def nation_trade_volume(spark, sf_dir):
     "per-language exact-duplicate rate: docs, distinct bodies (as md5 "
     "digests), removable count and rate",
 )
-def dup_rate_by_lang(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    h = F.md5("text")
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct(h).alias("n_unique"),
-            (F.count("*") - F.countDistinct(h)).alias("n_removable"),
-            (
-                F.round(
-                    (F.count("*") - F.countDistinct(h)).cast("double")
-                    / F.count("*"),
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias("dup_rate"),
-        )
-        .orderBy("lang")
-    )
 
 
 # =====================================================================
@@ -7668,7 +7059,7 @@ def purchase_gap_histogram(spark, sf_dir):
     )
 
 
-@q(
+q_sql(
     "basket_cooccurrence_topk",
     # Market-basket co-occurrence: part pairs bought within the same
     # order. The self-join keys on order id, so fan-out is bounded by
@@ -7684,28 +7075,6 @@ def purchase_gap_histogram(spark, sf_dir):
     "market-basket part-pair co-occurrence (order-bounded self-join "
     "fan-out), top-20 pairs",
 )
-def basket_cooccurrence_topk(spark, sf_dir):
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count("*").alias("n_orders"))
-        .orderBy(F.desc("n_orders"), "part_a", "part_b")
-        .limit(20)
-    )
 
 
 # =====================================================================
@@ -8195,7 +7564,7 @@ def template_prefix_audit(spark, sf_dir):
 # Round-7 wave 18 — cohort conversion
 # =====================================================================
 
-@q(
+q_sql(
     "conversion_by_signup_cohort",
     # Cohorted conversion: users grouped by first-signup week, the
     # fraction who purchase AFTER that signup. Three users-sized
@@ -8219,40 +7588,6 @@ def template_prefix_audit(spark, sf_dir):
     "signup-cohort conversion: per first-signup week, users who later "
     "purchase (users-sized pre-aggregates, no correlated scan)",
 )
-def conversion_by_signup_cohort(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    su = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_signup"))
-    )
-    pu = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(su, "user_id")
-        .filter(F.col("ts") > F.col("first_signup"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_purchase_after"))
-        .select(F.col("user_id").alias("pu_user"))
-    )
-    return (
-        su.join(pu, su.user_id == pu.pu_user, "left")
-        .groupBy(
-            F.date_trunc("week", "first_signup")
-            .cast("date")
-            .alias("cohort_week")
-        )
-        .agg(
-            F.count("*").alias("n_users"),
-            F.count("pu_user").alias("n_converted"),
-            (
-                F.round(
-                    F.count("pu_user").cast("double") / F.count("*"), 6
-                )
-                + F.lit(0.0)
-            ).alias("conversion_rate"),
-        )
-        .orderBy("cohort_week")
-    )
 
 
 # =====================================================================
@@ -8361,7 +7696,7 @@ def ttr_by_length_decile(spark, sf_dir):
 # Round-7 wave 20 — higher-moment stats and interval concurrency
 # =====================================================================
 
-@q(
+q_sql(
     "value_skew_kurtosis_by_type",
     # ClickHouse skewPop/kurtPop parity WITHOUT engine aggregates
     # (their double accumulation is partition-order dependent): four
@@ -8403,34 +7738,6 @@ def ttr_by_length_decile(spark, sf_dir):
     "population skewness + excess kurtosis per event type "
     "(skewPop/kurtPop parity) from decimal-exact power sums",
 )
-def value_skew_kurtosis_by_type(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    m = ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(v, 6).cast("decimal(38,6)")).alias("s1"),
-        F.sum(F.round(v * v, 6).cast("decimal(38,6)")).alias("s2"),
-        F.sum(F.round(v * v * v, 6).cast("decimal(38,6)")).alias("s3"),
-        F.sum(
-            F.round(v * v * v * v, 6).cast("decimal(38,6)")
-        ).alias("s4"),
-    )
-    n = F.col("n")
-    mu = F.col("s1").cast("double") / n
-    m2r = F.col("s2").cast("double") / n
-    m3r = F.col("s3").cast("double") / n
-    m4r = F.col("s4").cast("double") / n
-    var = m2r - mu * mu
-    skew = (m3r - 3 * mu * m2r + 2 * mu * mu * mu) / F.pow(var, 1.5)
-    kurt = (
-        m4r - 4 * mu * m3r + 6 * mu * mu * m2r - 3 * F.pow(mu, 4.0)
-    ) / F.pow(var, 2.0) - 3
-    return m.select(
-        "event_type",
-        "n",
-        (F.round(skew, 6) + F.lit(0.0)).alias("skew_pop"),
-        (F.round(kurt, 6) + F.lit(0.0)).alias("kurt_excess"),
-    ).orderBy("event_type")
 
 
 @q(
@@ -8496,7 +7803,7 @@ def max_concurrent_sessions(spark, sf_dir):
 # Round-7 wave 21 — counter deltas and interval union time
 # =====================================================================
 
-@q(
+q_sql(
     "value_delta_sum_by_type",
     # ClickHouse deltaSum parity (counter-reset-tolerant rate): the sum
     # of POSITIVE value deltas along each user's (ts, event_id)-ordered
@@ -8518,28 +7825,6 @@ def max_concurrent_sessions(spark, sf_dir):
     "deltaSum parity: positive value deltas along per-user ordered "
     "streams, decimal-exact, rolled up per event type",
 )
-def value_delta_sum_by_type(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dv = F.col("value") - F.lag("value").over(w)
-    d = ev.select("event_type", dv.alias("dv")).filter(
-        F.col("dv").isNotNull()
-    )
-    pos = F.col("dv") > 0
-    return (
-        d.groupBy("event_type")
-        .agg(
-            F.count(F.when(pos, F.lit(1))).alias("n_increases"),
-            F.sum(
-                F.when(
-                    pos, F.round(F.col("dv"), 6).cast("decimal(28,6)")
-                ).otherwise(F.lit(0).cast("decimal(28,6)"))
-            )
-            .cast("double")
-            .alias("delta_sum"),
-        )
-        .orderBy("event_type")
-    )
 
 
 @q(

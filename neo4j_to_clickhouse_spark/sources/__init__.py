@@ -14,6 +14,6 @@ from neo4j_to_clickhouse_spark.sources.snapshot import (  # noqa: F401
     write_events,
 )
 from neo4j_to_clickhouse_spark.sources.tables import (  # noqa: F401
-    load_tables,
+    load_table,
     register_views,
 )

@@ -19,8 +19,9 @@ def render() -> str:
         "One line per registered query (generated by "
         "`tools/gen_operator_index.py` — edit docstrings in "
         "`plans/queries.py`, not this file). Every entry pairs a Spark "
-        "DataFrame program with a DuckDB oracle unless marked "
-        "*rows-only*.",
+        "program with a DuckDB oracle unless marked *rows-only*; the "
+        "program is either hand-built from DataFrame operators or the "
+        "oracle SQL itself, run by Spark SQL.",
         "",
         f"{len(QUERIES)} queries, "
         f"{sum(1 for s in QUERIES.values() if s.oracle is not None)} "

@@ -1,6 +1,7 @@
 """Finish registering a newly-added @q query: window + index + README.
 
-After adding a new ``@q(...)`` block to ``plans/queries.py``, run
+After adding a new ``@q(...)`` or ``q_sql(...)`` block to
+``plans/queries.py``, run
 
     python tools/register_query.py <query_name>
 
