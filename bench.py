@@ -650,16 +650,49 @@ def _codegen_compiles(spark) -> int | None:
     return _codegen_snapshot(spark).get("codegen_compile_count")
 
 
+def _jit_ms(spark) -> int | None:
+    """Milliseconds HotSpot's JIT compiler threads have spent so far
+    (``CompilationMXBean.getTotalCompilationTime``, C1 and C2 summed;
+    it counts retired compiler threads too); None when unreadable."""
+    try:
+        mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        return mf.getCompilationMXBean().getTotalCompilationTime()
+    except Exception:
+        return None
+
+
+def _restart_spark(spark, app_name: str, cpus: str):
+    """Stop ``spark`` and its JVM, then build a session in a new JVM.
+
+    ``spark.stop()`` alone keeps PySpark's py4j gateway, so the next
+    ``get_spark`` would run in the same JVM, with its JIT state, code
+    cache and launch options. perfbench's ``stop_spark`` also shuts the
+    gateway down and waits for the JVM to exit; clearing PySpark's
+    handles to it makes ``get_spark`` launch a new one."""
+    from pyspark import SparkContext
+
+    from perfbench.run import stop_spark
+
+    stop_spark(spark)
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    return get_spark(
+        app_name, master=f"local[{cpus}]", shuffle_partitions=int(cpus)
+    )
+
+
 def _measure(spark, prepare, run_once):
     """Up to _MAX_RUNS timed runs of one job on the CURRENT session;
-    returns (runs, cpus, compiles, steals, clean flags, rowcount).
-    ``compiles`` is each run's count of generated classes compiled (a
-    row whose classes fell out of the codegen cache recompiles them on
-    every run), read outside the timed region."""
+    returns (runs, cpus, compiles, jit_ms, steals, clean flags,
+    rowcount). ``compiles`` is each run's count of generated classes
+    compiled (a row whose classes fell out of the codegen cache
+    recompiles them on every run) and ``jit_ms`` its HotSpot JIT
+    compile time, both read outside the timed region."""
     runs: list[float] = []
     steals: list[int] = []
     run_cpus: list[float] = []
     compiles: list[int | None] = []
+    jit_ms: list[int | None] = []
 
     def _clean_flags() -> list[bool]:
         return clean_run_flags(
@@ -679,6 +712,7 @@ def _measure(spark, prepare, run_once):
         spark.catalog.clearCache()
         prepare(spark)
         k0 = _codegen_compiles(spark)
+        j0 = _jit_ms(spark)
         s0 = _steal_cs()
         c0 = _task_cpu_s(spark)
         t0 = time.perf_counter()
@@ -687,12 +721,15 @@ def _measure(spark, prepare, run_once):
         run_cpus.append(round(_task_cpu_s(spark) - c0, 3))
         steals.append(_steal_cs() - s0)
         k1 = _codegen_compiles(spark)
+        j1 = _jit_ms(spark)
         compiles.append(None if k0 is None or k1 is None else k1 - k0)
-    return runs, run_cpus, compiles, steals, _clean_flags(), n
+        jit_ms.append(None if j0 is None or j1 is None else j1 - j0)
+    return runs, run_cpus, compiles, jit_ms, steals, _clean_flags(), n
 
 
 def _payload(contract: dict, runs: dict, cpu_s: dict, compiles: dict,
-             steal_cs: dict, cpu_retries: dict, codegen_final: dict) -> str:
+             jit_ms: dict, steal_cs: dict, cpu_retries: dict,
+             codegen_final: dict) -> str:
     """The archived evidence: the contract plus per-run diagnostics."""
     return json.dumps(
         {
@@ -700,6 +737,7 @@ def _payload(contract: dict, runs: dict, cpu_s: dict, compiles: dict,
             "runs": runs,
             "run_cpu_s": cpu_s,
             "run_codegen_compiles": compiles,
+            "run_jit_ms": jit_ms,
             "run_steal_cs": steal_cs,
             "cpu_retries": cpu_retries,
             "codegen_final": codegen_final,
@@ -738,6 +776,7 @@ def main() -> None:
     all_steals: dict[str, list[int]] = {}
     all_cpu: dict[str, list[float]] = {}
     all_compiles: dict[str, list[int | None]] = {}
+    all_jit: dict[str, list[int | None]] = {}
     # every timed run CONSUMES the full result with .collect() — the
     # same consumption as the correctness driver and a real client.
     # Rounds 1-7 timed `.count()`, under which Catalyst legitimately
@@ -774,7 +813,7 @@ def main() -> None:
     cpu_retries: dict[str, dict] = {}
 
     for name, prepare, run_once in jobs:
-        runs, run_cpus, compiles, steals, flags, n = _measure(
+        runs, run_cpus, compiles, jit_ms, steals, flags, n = _measure(
             spark, prepare, run_once
         )
 
@@ -797,22 +836,22 @@ def main() -> None:
                 f"re-measure (codegen: {jit_before})",
                 file=sys.stderr,
             )
-            spark.stop()
-            spark = get_spark(
-                "bench-retry",
-                master=f"local[{cpus}]",
-                shuffle_partitions=int(cpus),
-            )
+            spark = _restart_spark(spark, "bench-retry", cpus)
             _pin_caches(spark, sf_dir, cpus)
-            r2, c2, k2, s2, f2, n = _measure(spark, prepare, run_once)
+            r2, c2, k2, j2, s2, f2, n = _measure(spark, prepare, run_once)
             cpu_retries[name] = {
                 "stale_session": {
                     "wall": runs, "cpu_s": run_cpus, "compiles": compiles,
+                    "jit_ms": jit_ms,
                 },
-                "fresh_session": {"wall": r2, "cpu_s": c2, "compiles": k2},
+                "fresh_session": {
+                    "wall": r2, "cpu_s": c2, "compiles": k2, "jit_ms": j2,
+                },
                 "codegen_at_flag": jit_before,
             }
-            runs, run_cpus, compiles, steals, flags = r2, c2, k2, s2, f2
+            runs, run_cpus, compiles, jit_ms, steals, flags = (
+                r2, c2, k2, j2, s2, f2
+            )
             clean_cpus = [
                 c for c, ok in zip(run_cpus, flags) if ok
             ] or run_cpus
@@ -836,9 +875,10 @@ def main() -> None:
         all_steals[name] = steals
         all_cpu[name] = run_cpus
         all_compiles[name] = compiles
+        all_jit[name] = jit_ms
         print(
             f"# {name}: wall={runs} cpu_s={run_cpus} steal_cs={steals}"
-            f" compiles={compiles} ({n} rows)",
+            f" compiles={compiles} jit_ms={jit_ms} ({n} rows)",
             file=sys.stderr,
         )
     noise_after = _host_noise()
@@ -860,8 +900,8 @@ def main() -> None:
         },
     }
     payload = _payload(
-        contract, all_runs, all_cpu, all_compiles, all_steals, cpu_retries,
-        jit_final,
+        contract, all_runs, all_cpu, all_compiles, all_jit, all_steals,
+        cpu_retries, jit_final,
     )
     # full-JSON self-archive FIRST: the driver's stdout snapshot is
     # tail-truncated (~2,000 chars — it lost 13/20 wall times in r10 and

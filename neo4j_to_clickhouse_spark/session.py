@@ -14,6 +14,12 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
   (census and reading guide in docs/SCALING.md, "Generated-code reuse").
 - The driver heap defaults to a quarter of the host's physical memory
   (``SPARK_GRAFT_DRIVER_MEM`` overrides it).
+- The driver JVM keeps HotSpot's C2 compiler off planning code:
+  ``jit_directives.json`` excludes the packages that plan, compile and
+  explain queries (Catalyst's analyzer, optimizer and tree code, Janino,
+  py4j) from C2, so they stay C1-compiled, while row-processing code
+  reaches C2 at the JDK's usual thresholds (census, tradeoff and reading
+  guide in docs/SCALING.md, "JIT budget").
 """
 
 from __future__ import annotations
@@ -23,6 +29,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# HotSpot compiler directives for the driver JVM (see get_spark)
+JIT_DIRECTIVES = os.path.join(os.path.dirname(__file__), "jit_directives.json")
 
 
 def driver_mem(meminfo: str | None = None) -> str:
@@ -221,6 +230,29 @@ def get_spark(
         # executor threads' shuffle + cache + agg state); sized from the
         # host (driver_mem)
         .config("spark.driver.memory", driver_mem())
+        # HotSpot's C2 compiler threads were the largest CPU layer of a
+        # warm pass: in perfbench registry_mix's measured pass (4 cores)
+        # they took 6.9-7.8 s of 14.1-17.1 s process-tree CPU, Spark's
+        # task threads 1.1 s. Much of it compiled the code that plans
+        # each new query (Catalyst, Janino, py4j), which C1 serves well
+        # enough. jit_directives.json excludes those packages from C2, so
+        # they stay C1-compiled for the session's life (in a long-lived
+        # driver, planning runs at C1 speed); every other method reaches
+        # C2 at the JDK's thresholds, so task loops new to a session are
+        # not delayed; raising the tier-4 thresholds instead cut more CPU
+        # but held new task loops at C1 into bench.py's timed runs
+        # (docs/SCALING.md, "JIT budget"). The directives
+        # flag is diagnostic; the VM reports the file on stdout unless
+        # its output goes to stderr, which keeps a bench's JSON line
+        # last. Driver only: on a cluster the executors run the loops.
+        # Spark puts these default options before a caller's
+        # spark.driver.extraJavaOptions, so a flag repeated there wins.
+        # Static: it applies only when this call launches the JVM.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:+UnlockDiagnosticVMOptions -XX:+DisplayVMOutputToStderr"
+            f" -XX:CompilerDirectivesFile={JIT_DIRECTIVES}",
+        )
     )
     if master:
         builder = builder.master(master)

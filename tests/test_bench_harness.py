@@ -6,6 +6,7 @@ complete JSON in docs/evidence regardless of driver stdout truncation.
 
 import json
 import os
+import subprocess
 import sys
 
 from pyspark.sql import functions as F
@@ -87,19 +88,66 @@ def test_measure_archives_per_run_compile_counts(spark):
             .collect()
         )
 
-    runs, cpus, compiles, steals, _, n = bench._measure(
+    jit0 = bench._jit_ms(spark)
+    runs, cpus, compiles, jit, steals, _, n = bench._measure(
         spark, lambda s: None, run_once
     )
     assert n == 4
-    assert len(compiles) == len(runs) == len(cpus) >= 2
+    assert len(compiles) == len(runs) == len(cpus) == len(jit) >= 2
     assert compiles[0] >= 1
     assert compiles[1:] == [0] * (len(runs) - 1)
+    # JIT time is a per-run diff of the JVM's running total
+    assert all(isinstance(j, int) and j >= 0 for j in jit)
+    assert bench._jit_ms(spark) >= jit0 + sum(jit)
     payload = json.loads(bench._payload(
         {"metric": "headline_queries_total_wall"}, {"job": runs},
-        {"job": cpus}, {"job": compiles}, {"job": steals}, {}, {},
+        {"job": cpus}, {"job": compiles}, {"job": jit}, {"job": steals},
+        {}, {},
     ))
     assert payload["run_codegen_compiles"] == {"job": compiles}
+    assert payload["run_jit_ms"] == {"job": jit}
     assert payload["run_cpu_s"] == {"job": cpus}
+
+
+_RESTART_PROBE = """
+import json, sys
+import bench
+sys.path.insert(0, "tests")
+from test_session import _c2_excluded
+from neo4j_to_clickhouse_spark.session import get_spark
+
+def state(s):
+    return {
+        "pid": s.sparkContext._jvm.java.lang.ProcessHandle.current().pid(),
+        "c2_excluded": len(_c2_excluded(s)),
+        "rows": s.range(0, 10, 1, 2).selectExpr("sum(id)").collect()[0][0],
+    }
+
+spark = get_spark("first", master="local[1]", shuffle_partitions=1)
+before = state(spark)
+spark = bench._restart_spark(spark, "second", "1")
+print(json.dumps({"before": before, "after": state(spark),
+                  "app": spark.sparkContext.appName}))
+"""
+
+
+def test_restart_spark_launches_a_new_jvm():
+    """The CPU-inflation guard's retry runs in a new JVM: the pid
+    changes, the new JVM carries get_spark's launch options, and the new
+    session runs jobs. ``spark.stop()`` alone keeps the JVM. Run in a
+    subprocess: the suite's own JVM must not be stopped."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_PROBE], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["before"]["pid"] != got["after"]["pid"]
+    assert got["after"]["c2_excluded"] == got["before"]["c2_excluded"] > 0
+    assert got["after"]["rows"] == 45
+    assert got["app"] == "second"
 
 
 def test_bm25_index_jobs_shape(spark):
